@@ -63,21 +63,24 @@ object TextFunctions {
 
   /** Word n-gram shingles of a text column (duplicates kept; wrap in
     * `array_distinct` for set semantics). Empty array when fewer than n
-    * tokens — `sequence(1, k)` with k < 1 would count DOWN, so guard it.
+    * tokens — a negative slice length would throw, so guard it.
     */
   def wordShingles(text: Column, n: Int): Column =
     shinglesOfTokens(tokens(text), n)
 
-  /** Shingles from an already-tokenized array column. Prefer computing the
-    * token array in its OWN projection and passing it here: `ts` is
-    * referenced three times, and if it's an inline `tokens(text)` call the
-    * whole tokenize tree gets triplicated in the fused stage (Catalyst
-    * doesn't CSE it), which at corpus scale is the difference between one
-    * and three regex passes per row.
+  /** Shingles from an already-tokenized array column: shingle i joins
+    * tokens i..i+n-1, built by zipping n shifted slices of length k =
+    * size - n + 1. `ts` appears only OUTSIDE the lambda, so an inline
+    * `tokens(text)` is evaluated a fixed 2n+1 times per row — a lambda
+    * that sliced `ts` itself re-ran the whole tokenizer once per shingle,
+    * quadratic in document length. Computing the token array in its own
+    * projection and passing the column still evaluates it once.
     */
-  def shinglesOfTokens(ts: Column, n: Int): Column =
-    when(size(ts) >= n,
-      transform(sequence(lit(1), size(ts) - (n - 1)),
-        i => array_join(slice(ts, i, lit(n)), " "))
+  def shinglesOfTokens(ts: Column, n: Int): Column = {
+    val k = size(ts) - (n - 1)
+    when(k >= 1,
+      transform(arrays_zip((1 to n).map(j => slice(ts, lit(j), k)): _*),
+        z => concat_ws(" ", (0 until n).map(j => z.getField(j.toString)): _*))
     ).otherwise(array().cast("array<string>"))
+  }
 }

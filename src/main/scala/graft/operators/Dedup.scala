@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -439,12 +439,6 @@ object Dedup {
     (Array.fill(NumHashes)(1L + rnd.nextInt(Int.MaxValue - 1)),
      Array.fill(NumHashes)(rnd.nextInt(Int.MaxValue).toLong))
   }
-
-  /** MinHash signatures: one row per doc, sig = array of k min-hash values.
-    * One aggregation with k `min` columns — a single shuffle on doc_id.
-    */
-  def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    signaturesOf(shingleIndex(spark, sfDir))
 
   /** Signatures of an arbitrary (doc_id, sh) relation — a doc's signature
     * depends only on its OWN shingles, so signatures of a filtered slice

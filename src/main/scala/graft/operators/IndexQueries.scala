@@ -105,8 +105,7 @@ object IndexQueries {
                     nQueryDocs: Int, k: Int): DataFrame = {
     // weights sit behind a repartition(term) exchange: term is the
     // dot-product join key, so the join needs no further shuffle
-    val p = spark.read.parquet(MaterializedIndex.ensure(spark, sfDir))
-      .select(col("term"), col("doc_id"), col("tf"))
+    val p = MaterializedIndex.postings(spark, sfDir)
       .repartition(col("term"))
     // doc_id is the documents PK: a plain count(*) IS the distinct count,
     // without the distinct's extra doc_id exchange
@@ -165,7 +164,10 @@ object IndexQueries {
     * crossJoin-broadcast), per-term document frequencies (only the query
     * terms' postings are read). Scoring is a projection over the query
     * terms' posting lists; the global top-k is a TakeOrdered. Work scales
-    * with the query terms' posting lists — never the corpus.
+    * with the query terms' posting lists — never the corpus. Jobs (8 warm
+    * at test scale, pinned in JobBudgetSpec) are the aggregations' map
+    * stages, the broadcasts and the result; the postings read declares its
+    * schema, so none infers one.
     */
   def bm25TopK(spark: SparkSession, sfDir: String, terms: Seq[String],
                k: Int): DataFrame = {
@@ -530,9 +532,8 @@ object IndexQueries {
     */
   def partitionChecksums(spark: SparkSession, sfDir: String): DataFrame = {
     val P = 1000000007L
-    spark.read.parquet(MaterializedIndex.ensure(spark, sfDir))
-      .select(col("first_letter").cast("string").as("first_letter"),
-        col("term"), col("doc_id"), col("tf"))
+    Indexer.readIndex(spark, MaterializedIndex.ensure(spark, sfDir))
+      .select("first_letter", "term", "doc_id", "tf")
       .withColumn("termh", graft.functions.PolyHashExpr.polyHash(col("term")))
       .withColumn("rowh",
         (col("termh") * 1000003L + col("doc_id") * 31L + col("tf")) % P)

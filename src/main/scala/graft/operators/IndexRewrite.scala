@@ -72,7 +72,7 @@ object IndexRewrite {
     val cnt = d.a.flatMap(_.collect {
       case ae: AggregateExpression => ae.aggregateFunction
     }).head
-    val mvPlan = spark.read.parquet(path).queryExecution.analyzed
+    val mvPlan = Indexer.readIndex(spark, path).queryExecution.analyzed
     AggRewriteRule.register(spark, baseKey, AggRewriteRule.MvSpec(
       mvPlan = mvPlan,
       keys = Seq(("doc_id", docKey, (a: Attribute) => a)),

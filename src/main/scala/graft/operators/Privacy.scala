@@ -25,7 +25,6 @@ import graft.sources.Tables
   */
 object Privacy {
 
-  private val Knuth = 2654435761L
   private val M32 = 4294967296L
 
   /** Pseudonymize the customer table: surrogate key, digits masked out of

@@ -18,7 +18,6 @@ import graft.sources.Tables
   */
 object Sampling {
 
-  private val Knuth = 2654435761L
   private val M32 = 4294967296L
 
   /** h(id) mod 100 — a deterministic percentile bucket per row; exact for

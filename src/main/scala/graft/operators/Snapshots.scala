@@ -68,8 +68,8 @@ object Snapshots {
   /** Snapshot v1: the full index build, every letter owned by `v1/`. */
   private[graft] def commitV1(spark: SparkSession, sfDir: String, root: String): Unit = {
     Indexer.writeIndex(spark, sfDir, new File(root, "v1").getAbsolutePath)
-    val letters = spark.read.parquet(new File(root, "v1").getAbsolutePath)
-      .select(col("first_letter").cast("string")).distinct()
+    val letters = Indexer.readIndex(spark, new File(root, "v1").getAbsolutePath)
+      .select(col("first_letter")).distinct()
       .collect().map(_.getString(0)) // ≤ 26 rows — this IS the metadata
     writeManifest(root, 1, letters.map(_ -> "v1").toMap)
   }
@@ -97,8 +97,8 @@ object Snapshots {
     Files.createSymbolicLink(Paths.get(root, "v1"), Paths.get(data))
     val sig = graft.sources.Tables.listingSig(Tables.documents(spark, sfDir))
     val letters = v1Letters.getOrElseUpdate(s"$sfDir|$sig",
-      spark.read.parquet(data)
-        .select(col("first_letter").cast("string")).distinct()
+      Indexer.readIndex(spark, data)
+        .select(col("first_letter")).distinct()
         .collect().map(_.getString(0)).map(_ -> "v1").toMap)
     writeManifest(root, 1, letters)
   }

@@ -84,7 +84,7 @@ object RefIndexInterop {
     */
   def refIndexRuntimePruned(spark: SparkSession, sfDir: String,
                             minTf: Long = 10L): DataFrame = {
-    val dim = spark.read.parquet(
+    val dim = graft.operators.Indexer.readIndex(spark,
         graft.operators.MaterializedIndex.ensure(spark, sfDir))
       .filter(col("tf") >= minTf)
       .select(col("first_letter")).distinct()

@@ -33,20 +33,6 @@ object StreamingDedup {
       .select(col("doc_id"), sha2(col("text"), 256).as("fp"), col("lang"))
       .dropDuplicates("fp")
 
-  /** Bounded-state variant: duplicates are only suppressed while their
-    * fingerprint is younger than the watermark horizon — exact when
-    * duplicate arrivals cluster within `horizon` of the original.
-    */
-  def dedupStreamBounded(spark: SparkSession, watchDir: String,
-                         horizon: String): DataFrame =
-    spark.readStream
-      .schema(DocSchema + ", ingest_ts TIMESTAMP")
-      .parquet(watchDir)
-      .withWatermark("ingest_ts", horizon)
-      .select(col("doc_id"), sha2(col("text"), 256).as("fp"),
-        col("lang"), col("ingest_ts"))
-      .dropDuplicatesWithinWatermark("fp")
-
   /** Run the unbounded dedup stream into an in-memory table (tests/local
     * smoke). Caller stops the query.
     */

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Compaction
 
 class CompactionSpec extends SparkTestBase {
-  import spark.implicits._
 
   test("compact merges small files without changing content") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"

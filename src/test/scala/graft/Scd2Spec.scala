@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Events
 
 /** SCD type-2 interval builds: a handcrafted history with re-opened

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Dedup, Packing, TextAnalysis}
-import graft.functions.TextFunctions
 
 /** Independent ground truth for the round-10 curation additions: the
   * C4-style span scrub, the keep-longest cluster retention policy, and

@@ -17,6 +17,31 @@ class TextFunctionsSpec extends SparkTestBase {
     assert(got(3) === Seq.empty)
   }
 
+  test("shinglesOfTokens: inline and pre-projected tokens give identical shingles") {
+    // the inline form is what wordShingles builds; the pre-projected form
+    // is what Dedup passes. Both must equal a driver-side sliding window,
+    // including texts with fewer than n tokens and empty text.
+    val rnd = new scala.util.Random(7)
+    val texts = Seq("", "one", "one two", "one two three", "!!! ...") ++
+      (0 until 30).map(_ => Vector.fill(rnd.nextInt(60))(
+        Vector.fill(1 + rnd.nextInt(4))(('a' + rnd.nextInt(3)).toChar).mkString)
+        .mkString(" "))
+    val df = texts.toDF("text")
+    val toks = df.select(tokens(col("text"))).as[Seq[String]].collect().toSeq
+    for (n <- Seq(1, 2, 3, 5)) {
+      val inline = df.select(shinglesOfTokens(tokens(col("text")), n))
+        .as[Seq[String]].collect().toSeq
+      val projected = df.select(tokens(col("text")).as("ts"))
+        .select(shinglesOfTokens(col("ts"), n))
+        .as[Seq[String]].collect().toSeq
+      val reference = toks.map(ts =>
+        if (ts.size < n) Seq.empty[String]
+        else ts.sliding(n).map(_.mkString(" ")).toSeq)
+      assert(inline === projected, s"n=$n")
+      assert(projected === reference, s"n=$n")
+    }
+  }
+
   test("property: token multiset is invariant under document splitting") {
     // mirrors the word-boundary-split correctness argument of
     // worker.c:210-220: splitting a corpus at any word boundary must not
