@@ -106,8 +106,7 @@ object Covariance {
     * cells — shared verbatim by the batch query and the drained-state
     * serve, so "streamed cells ≡ batch cells" implies identical grids.
     */
-  private[graft] def gridOf(spark: SparkSession, pairSums: DataFrame,
-                            dimSums: DataFrame): DataFrame =
+  private[graft] def gridOf(pairSums: DataFrame, dimSums: DataFrame): DataFrame =
     mergedCells(pairSums)
       .join(broadcast(dimSums.select(col("dim").as("dim_i"), col("s").as("si"))), "dim_i")
       .join(broadcast(dimSums.select(col("dim").as("dim_j"), col("s").as("sj"))), "dim_j")
@@ -171,7 +170,7 @@ object Covariance {
     * exact integers, rounded at 6dp), served from the materialized cells.
     */
   def covarianceGrid(spark: SparkSession, sfDir: String): DataFrame =
-    gridOf(spark, storedPairCells(spark, sfDir), storedDimCells(spark, sfDir))
+    gridOf(storedPairCells(spark, sfDir), storedDimCells(spark, sfDir))
 
   /** q_embed_correlation: the Pearson correlation grid from the SAME
     * exact moments — r_ij = (n·s_ij − s_i·s_j) / √(v_i·v_j) with

@@ -66,7 +66,7 @@ object RollupView {
     val root = rootOf(spark, sfDir)
     val g = built.getOrElseUpdate(root, {
       val df = viewDf(spark, sfDir)
-      val s = baseSigOf(spark, df)
+      val s = baseSigOf(df)
       val p = s"$root/g0"
       df.write.mode("overwrite").parquet(p)
       Gen(p, s, 0)
@@ -96,7 +96,7 @@ object RollupView {
     ensure(spark, sfDir)
     val prev = built(root)
     val df = viewDf(spark, sfDir)
-    val curSig = baseSigOf(spark, df)
+    val curSig = baseSigOf(df)
     if (curSig == prev.sig) return prev.dataPath // already current
     val next = graft.util.ListingDiff.deltaFiles(prev.sig, curSig) match {
       case None => // overwrite/compaction: full rebuild
@@ -125,7 +125,7 @@ object RollupView {
   }
 
   /** The base file-listing signature behind a view definition. */
-  private def baseSigOf(spark: SparkSession, df: DataFrame): String = {
+  private def baseSigOf(df: DataFrame): String = {
     val agg = df.queryExecution.analyzed
       .collectFirst { case ag: Aggregate => ag }.get
     val d = AggRewriteRule.destructure(agg).getOrElse(
@@ -213,7 +213,7 @@ object RollupView {
       "graft_mv_bytype_" + graft.util.Scratch.valueToken(sfDir))
     val (path, sig) = builtByType.getOrElseUpdate(root, {
       val df = byTypeViewDf(spark, sfDir)
-      val s = baseSigOf(spark, df)
+      val s = baseSigOf(df)
       df.write.mode("overwrite").parquet(s"$root/g0")
       (s"$root/g0", s)
     })

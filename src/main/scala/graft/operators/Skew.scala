@@ -22,7 +22,7 @@ object Skew {
                  salt: Int): DataFrame = {
     val probeCols = probe.columns
     val salted = probe.withColumn("__salt",
-      pmod(xxhash64(probeCols.map(col): _*), lit(salt)))
+      pmod(xxhash64(probeCols.map(col).toIndexedSeq: _*), lit(salt)))
     val replicated = build.withColumn("__salt",
       explode(array((0 until salt).map(i => lit(i.toLong)): _*)))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")

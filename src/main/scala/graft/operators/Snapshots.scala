@@ -104,7 +104,7 @@ object Snapshots {
   }
 
   /** Snapshot v2: copy-on-write upsert of [[commitV1]]'s snapshot. */
-  private[graft] def commitUpsertV2(spark: SparkSession, sfDir: String, root: String,
+  private[graft] def commitUpsertV2(spark: SparkSession, root: String,
                                     updatedDocs: DataFrame): Unit =
     commitUpsert(spark, root, 1, 2, updatedDocs)
 
@@ -263,7 +263,7 @@ object Snapshots {
     val updated = Tables.documents(spark, sfDir)
       .filter(col("doc_id") === 0)
       .withColumn("text", concat(col("text"), lit(" graftmarker")))
-    commitUpsertV2(spark, sfDir, root, updated)
+    commitUpsertV2(spark, root, updated)
     snapshotStats(readSnapshot(spark, root, 1), "v1")
       .unionByName(snapshotStats(readSnapshot(spark, root, 2), "v2"))
       .orderBy("version")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -11,10 +11,8 @@ import graft.sources.Tables
   * delta-encoded INSIDE `foreachBatch` (codes are row-local — a pure
   * function of the vector and the fixed centroid/codebook literals, the
   * same property [[Similarity.ensurePqCodesIncremental]] exploits in
-  * batch) and appended to a COPY-ON-WRITE generation of the codes
-  * parquet: write v(n+1) = hardlinks of v(n) + the delta's part files,
-  * then read v(n+1) next batch — a failed batch never corrupts the
-  * served generation, and in-flight readers of v(n) are untouched.
+  * batch) and appended to a [[StateGenerations]] generation of the codes
+  * parquet: v(n+1) = hardlinks of v(n) + the delta's part files.
   *
   * The feed is staged as two batches — the base corpus, then the
   * q_ivfpq_refresh append batch (the 100 lowest vec_ids re-inserted
@@ -28,11 +26,10 @@ import graft.sources.Tables
   */
 object StreamingAnn {
 
-  private val scratch = new graft.util.ScratchSlot
+  private val state = new StateGenerations("graft_stream_ann_")
 
   /** Spec observability: batches the last drain ran. */
-  private[graft] val lastNumBatches =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lastNumBatches = state.numBatches
 
   /** Spec observability: rows encoded per batch of the last drain —
     * pins "the second batch encoded ONLY the delta", the claim that
@@ -43,52 +40,33 @@ object StreamingAnn {
 
   def annCodesAvailableNow(spark: SparkSession, sfDir: String,
                            resumeProof: Boolean = false): DataFrame = {
-    import java.nio.file.Files
-    scratch.retire()
-    val root = Files.createTempDirectory("graft_stream_ann_")
-    val codesRoot = root.resolve("codes")
+    def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val staged = StreamingIndexer.ensureSplitFeed(spark,
       "graft_ann_feed_" + graft.util.Scratch.valueToken(sfDir),
       Tables.listingSig(Tables.embeddings(spark, sfDir)))(
-      a => spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .coalesce(1).write.parquet(a),
-      b => spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .filter(col("vec_id") < 100)
-        .withColumn("vec_id", col("vec_id") + 10000)
-        .coalesce(1).write.parquet(b))
+      embeddings,
+      embeddings.filter(col("vec_id") < 100)
+        .withColumn("vec_id", col("vec_id") + 10000))
 
-    val ss = StreamingIndexer.drainSession(spark)
     val dim = Similarity.embeddingDim(spark, sfDir)
-    lastNumBatches.set(0)
     lastBatchRows.set(Nil)
-    @volatile var gen = 0
-    val writeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
-      val next = codesRoot.resolve(s"v${gen + 1}")
-      if (gen > 0)
-        // COW generation: prior codes carry over as hardlinks — zero
-        // re-encode, zero copy; only the delta below writes data
-        graft.util.Scratch.hardlinkTree(
-          codesRoot.resolve(s"v$gen").toString, next.toString,
-          skip = _ == "_SUCCESS")
+    // code generations are append-only per batch (order-insensitive) →
+    // one-incarnation drain for the declared query; the spec pins the
+    // two-incarnation resume shape
+    val codes = state.drain(spark, staged, resumeProof) { _ => (batch, prev, next) =>
+      // COW generation: prior codes carry over as hardlinks — zero
+      // re-encode, zero copy; only the delta below writes data
+      prev.foreach(graft.util.Scratch.hardlinkTree(_, next, skip = _ == "_SUCCESS"))
       val obs = new org.apache.spark.sql.Observation()
       Similarity.encodePq(batch.observe(obs, count(lit(1)).as("n")), dim)
-        .write.mode("append").parquet(next.toString)
+        .write.mode("append").parquet(next)
       val n = obs.get.get("n") match {
         case Some(v: Number) => v.longValue()
         case _ => 0L
       }
       lastBatchRows.updateAndGet(n :: _)
-      gen += 1
-      lastNumBatches.incrementAndGet()
       ()
     }
-    // code generations are append-only per batch (order-insensitive) →
-    // one-incarnation drain for the declared query; the spec pins the
-    // two-incarnation resume shape
-    StreamingIndexer.drainSplitFeed(ss, staged, root.resolve("watch"),
-      root.resolve("cp"), resumeProof)(writeBatch)
-    scratch.defer(() => graft.util.Scratch.deleteRecursively(root))
-    Similarity.pqArtifactFingerprint(
-      spark.read.parquet(codesRoot.resolve(s"v$gen").toString))
+    Similarity.pqArtifactFingerprint(spark.read.parquet(codes))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Covariance
@@ -13,7 +13,7 @@ import graft.sources.Tables
   * componentwise sum (counts and decimal(38,0) sums — the merge IS the
   * aggregation, integer-exact, so the continuously-maintained grid equals
   * a from-scratch batch pass bit-for-bit), and state generations are
-  * copy-on-write parquet, the [[StreamingLinear]] posture.
+  * copy-on-write parquet ([[StateGenerations]]).
   *
   * The feed stages the embeddings table as two vec_id-split batches
   * through two query incarnations over ONE checkpoint (resume proven in
@@ -25,36 +25,27 @@ import graft.sources.Tables
   */
 object StreamingCovariance {
 
-  private val scratch = new graft.util.ScratchSlot
+  private val state = new StateGenerations("graft_stream_cov_")
 
   /** Spec observability: batches the last drain ran. */
-  private[graft] val lastNumBatches =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lastNumBatches = state.numBatches
 
   def covarianceGridAvailableNow(spark: SparkSession, sfDir: String,
                                  splitAt: Long = 250L,
                                  resumeProof: Boolean = false): DataFrame = {
-    import java.nio.file.Files
-    scratch.retire()
-    val root = Files.createTempDirectory("graft_stream_cov_")
-    val stateRoot = root.resolve("state")
     // the two vec_id-split batch files are a pure function of the corpus
     // — memoized once per corpus state; each execution hardlink-assembles
     // its own watch dir batch by batch (resume proof untouched)
+    def vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val staged = StreamingIndexer.ensureSplitFeed(spark,
       s"graft_cov_feed_${splitAt}_" + graft.util.Scratch.valueToken(sfDir),
-      graft.sources.Tables.listingSig(Tables.embeddings(spark, sfDir)))(
-      a => Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") < splitAt).coalesce(1).write.parquet(a),
-      b => Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") >= splitAt).coalesce(1).write.parquet(b))
+      Tables.listingSig(Tables.embeddings(spark, sfDir)))(
+      vecs.filter(col("vec_id") < splitAt), vecs.filter(col("vec_id") >= splitAt))
 
-    val ss = StreamingIndexer.drainSession(spark)
-    lastNumBatches.set(0)
-    @volatile var gen = 0
-    val writeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
+    // cell merges are commutative sums, so the declared query takes the
+    // one-incarnation (per-file micro-batch) drain; the spec pins the
+    // two-incarnation resume shape against it
+    val last = state.drain(spark, staged, resumeProof) { ss => (batch, prev, next) =>
       // the d(d+1)/2 pair-product explosion is the expensive per-row step
       // and the staged feed is one file per batch = a one-partition batch:
       // spread it before the explode (same scale-adaptive guard as the
@@ -76,34 +67,22 @@ object StreamingCovariance {
         .select(lit("d").as("kind"), lit(-1L).as("d"), col("dim").as("idx"),
           lit(0L).as("n"), col("s").as("sij"))
       val delta = pairDelta.unionByName(dimDelta)
-      val merged =
-        if (gen == 0) delta
-        else
-          ss.read.parquet(stateRoot.resolve(s"v$gen").toString)
-            .unionByName(delta)
-            // state cells are keyed (kind, row width, position) like the
-            // batch pairCells, so mixed-width corpora merge correctly
-            .groupBy("kind", "d", "idx")
-            .agg(sum("n").as("n"),
-              sum("sij").cast("decimal(38,0)").as("sij"))
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(stateRoot.resolve(s"v${gen + 1}").toString)
-      gen += 1
-      lastNumBatches.incrementAndGet()
-      ()
+      val merged = prev.fold(delta)(p =>
+        ss.read.parquet(p)
+          .unionByName(delta)
+          // state cells are keyed (kind, row width, position) like the
+          // batch pairCells, so mixed-width corpora merge correctly
+          .groupBy("kind", "d", "idx")
+          .agg(sum("n").as("n"),
+            sum("sij").cast("decimal(38,0)").as("sij")))
+      merged.coalesce(1).write.mode("overwrite").parquet(next)
     }
-    // cell merges are commutative sums, so the declared query takes the
-    // one-incarnation (per-file micro-batch) drain; the spec pins the
-    // two-incarnation resume shape against it
-    StreamingIndexer.drainSplitFeed(ss, staged, root.resolve("watch"),
-      root.resolve("cp"), resumeProof)(writeBatch)
-    scratch.defer(() => graft.util.Scratch.deleteRecursively(root))
-    val state = spark.read.parquet(stateRoot.resolve(s"v$gen").toString)
+    val cells = spark.read.parquet(last)
     // the count n must come back as BIGINT after the sum-merge roundtrip
-    val pairState = state.where(col("kind") === "p")
+    val pairState = cells.where(col("kind") === "p")
       .select(col("d"), col("idx"), col("n").cast("long").as("n"), col("sij"))
-    val dimState = state.where(col("kind") === "d")
+    val dimState = cells.where(col("kind") === "d")
       .select(col("idx").cast("int").as("dim"), col("sij").as("s"))
-    Covariance.gridOf(spark, pairState, dimState)
+    Covariance.gridOf(pairState, dimState)
   }
 }

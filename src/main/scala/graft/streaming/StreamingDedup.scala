@@ -63,7 +63,7 @@ object StreamingDedup {
     */
   def dedupAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
     StreamingIndexer.drainToTable(spark, sfDir, "documents.parquet",
-      "stream_dedup", drainScratch) { (ss, watch) =>
+      drainScratch) { (ss, watch) =>
         ss.readStream
           .schema(DocSchema)
           .parquet(watch)

@@ -30,7 +30,7 @@ object StreamingDrift {
     val half = Tables.documents(spark, sfDir)
       .agg(expr("max(doc_id) div 2")).head().getLong(0)
     val newCells = StreamingIndexer.drainToTable(spark, sfDir,
-      "documents.parquet", "stream_drift", scratch) { (ss, watch) =>
+      "documents.parquet", scratch) { (ss, watch) =>
         ss.readStream.schema(DocSchema).parquet(watch)
           .filter(col("doc_id") > half)
           .select(Drift.dimBins(charBin).as("dc"))

@@ -54,7 +54,7 @@ object StreamingIndexer {
     * session) means concurrent users of the caller's session never observe
     * the override.
     *
-    * Default 4, MEASURED (r17) over the whole 19-query streaming family
+    * 4 partitions, MEASURED (r17) over the whole 19-query streaming family
     * on one box, min-of-2 per query, identical conditions: 8 partitions
     * = 68.2 s, 4 = 53.9 s (state-store setup/commit file ops dominate a
     * bounded drain and scale with the partition count), 2 = 70.0 s (the
@@ -62,17 +62,9 @@ object StreamingIndexer {
     * partition-count-invariant — every module's spec and oracle pins
     * that.
     */
-  private[streaming] def drainSession(spark: SparkSession,
-                                      partitions: Int = 4): SparkSession = {
+  private[streaming] def drainSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    // A/B and deployment override for the measured default (parse
-    // defensively: a malformed value falls back rather than failing a
-    // drain). An unbounded production feed sizes this to its real key
-    // cardinality; the bounded drains use the measured-best constant.
-    val parts = spark.conf.getOption("spark.graft.drainShufflePartitions")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      .getOrElse(partitions)
-    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
     // `newSession` isolates runtime conf, so the state-backend choice is
     // forwarded explicitly: setting spark.graft.stateStoreProvider on the
     // caller's session (e.g. to RocksDBStateStoreProvider) switches EVERY
@@ -85,21 +77,23 @@ object StreamingIndexer {
   }
 
   /** The memoize-two-split-batches staging shared by every
-    * two-incarnation resume proof (scd2, covariance, the postings
-    * resume): the batch FILES are a pure function of the corpus, staged
+    * two-incarnation resume proof (the [[StateGenerations]] maintainers,
+    * the postings resume): the batch FILES are a pure function of the corpus, staged
     * once per corpus state as `a/` and `b/` under one memoized dir; each
     * execution hardlink-assembles its own watch dir batch by batch, so
     * the checkpoint-resume semantics are per-execution while the corpus
     * writes are not. Callers must build their name from VALUES (not
     * hashCodes) of any parameters that change the split — hash-keyed
-    * names collide silently across parameterizations.
+    * names collide silently across parameterizations. The batches are
+    * by-name: they are built (and any job they need runs) only when the
+    * memo misses.
     */
   private[streaming] def ensureSplitFeed(
       spark: SparkSession, name: String, sig: String)(
-      writeA: String => Unit, writeB: String => Unit): String =
+      a: => DataFrame, b: => DataFrame): String =
     graft.util.Scratch.memoizedDir(spark, name, sig) { p =>
-      writeA(s"$p/a")
-      writeB(s"$p/b")
+      a.coalesce(1).write.parquet(s"$p/a")
+      b.coalesce(1).write.parquet(s"$p/b")
     }
 
   // staged single-file copies, memoized per (corpus dir, file) STATE —
@@ -220,7 +214,7 @@ object StreamingIndexer {
     */
   private[streaming] def drainToTable(
       spark: SparkSession, sfDir: String, file: String,
-      prefix: String, slot: graft.util.ScratchSlot,
+      slot: graft.util.ScratchSlot,
       mode: String = "complete") // append for joins — complete only fits aggregations
       (mkStream: (SparkSession, String) => DataFrame): DataFrame = {
     slot.retire()
@@ -243,7 +237,7 @@ object StreamingIndexer {
     * the trigger, not from any change to the streaming plan or state.
     */
   def indexAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
-    drainToTable(spark, sfDir, "documents.parquet", "stream_index",
+    drainToTable(spark, sfDir, "documents.parquet",
       indexScratch)((ss, watch) => postingsStream(ss, watch))
       .select(substring(col("term"), 1, 1).as("first_letter"),
         col("term"), col("doc_id"), col("tf"))
@@ -285,8 +279,7 @@ object StreamingIndexer {
       ensureSplitFeed(spark,
         "graft_resume_feed_" + graft.util.Scratch.valueToken(sfDir),
         graft.sources.Tables.listingSig(docs))(
-        a => docs.filter(col("doc_id") <= split).coalesce(1).write.parquet(a),
-        b => docs.filter(col("doc_id") > split).coalesce(1).write.parquet(b))
+        docs.filter(col("doc_id") <= split), docs.filter(col("doc_id") > split))
     }
     graft.util.Scratch.hardlinkTree(s"$staged/a", watch.resolve("a").toString)
     val ss = drainSession(spark)
@@ -361,7 +354,7 @@ object StreamingIndexer {
     * the oracle's hour buckets in agreement whatever the driver wrote.
     */
   def hourlyRollupAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    drainToTable(spark, sfDir, "events.parquet", "stream_hourly",
+    drainToTable(spark, sfDir, "events.parquet",
       hourlyScratch) { (ss, watch) =>
         hourlyWindows(graft.sources.Tables.eventsStream(ss, watch, watch))
       }
@@ -383,7 +376,7 @@ object StreamingIndexer {
     * oracle checks it bit-for-bit.
     */
   def enrichedSegmentRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    drainToTable(spark, sfDir, "events.parquet", "stream_enrich",
+    drainToTable(spark, sfDir, "events.parquet",
       enrichScratch) { (ss, watch) =>
         val dim = graft.sources.Tables.customer(ss, sfDir)
           .select(col("c_custkey"), col("c_mktsegment"))

@@ -28,7 +28,7 @@ object StreamingJoin {
     */
   def purchaseViewsAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = StreamingIndexer.drainToTable(spark, sfDir, "events.parquet",
-      "stream_ssjoin", ssScratch, mode = "append") { (ss, watch) =>
+      ssScratch, mode = "append") { (ss, watch) =>
         // floor the event time to MILLISECONDS before watermarking: the
         // batch oracle compares epoch-ms, and a view landing in the same
         // ms as the purchase but a later µs must still join. eventsStream

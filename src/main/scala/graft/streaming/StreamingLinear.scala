@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.LinearModel
@@ -12,7 +12,7 @@ import graft.sources.Tables
   * moments, the stored moment row absorbs them by componentwise sum (the
   * merge IS the aggregation — integer-exact, so the continuously-refreshed
   * betas equal a from-scratch retrain bit-for-bit), and state generations
-  * are copy-on-write parquet, the [[StreamingScd2]] posture.
+  * are copy-on-write parquet ([[StateGenerations]]).
   *
   * The feed stages the orders table as two date-ordered batches through
   * two query incarnations over ONE checkpoint (resume proven), each batch
@@ -26,68 +26,47 @@ import graft.sources.Tables
   */
 object StreamingLinear {
 
-  private val scratch = new graft.util.ScratchSlot
+  private val state = new StateGenerations("graft_stream_linear_")
 
   /** Spec observability: batches the last drain ran. */
-  private[graft] val lastNumBatches =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lastNumBatches = state.numBatches
 
   def linearFitAvailableNow(spark: SparkSession, sfDir: String,
                             splitAt: String = "1997-07-01",
                             resumeProof: Boolean = false): DataFrame = {
-    import java.nio.file.Files
-    scratch.retire()
-    val root = Files.createTempDirectory("graft_stream_linear_")
-    val stateRoot = root.resolve("state")
-    // feed staging memoized per corpus state (was a per-invocation write)
+    def orders = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_orderdate"))
+    val split = lit(splitAt).cast("timestamp")
     val staged = StreamingIndexer.ensureSplitFeed(spark,
       s"graft_linear_feed_${graft.util.Scratch.valueToken(splitAt)}_" +
         graft.util.Scratch.valueToken(sfDir),
-      graft.sources.Tables.listingSig(Tables.orders(spark, sfDir)))(
-      a => Tables.orders(spark, sfDir)
-        .select(col("o_orderkey"), col("o_orderdate"))
-        .filter(col("o_orderdate") < lit(splitAt).cast("timestamp"))
-        .coalesce(1).write.parquet(a),
-      b => Tables.orders(spark, sfDir)
-        .select(col("o_orderkey"), col("o_orderdate"))
-        .filter(col("o_orderdate") >= lit(splitAt).cast("timestamp"))
-        .coalesce(1).write.parquet(b))
+      Tables.listingSig(Tables.orders(spark, sfDir)))(
+      orders.filter(col("o_orderdate") < split),
+      orders.filter(col("o_orderdate") >= split))
 
-    val ss = StreamingIndexer.drainSession(spark)
-    val lineitem = Tables.lineitem(ss, sfDir)
-      .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-    lastNumBatches.set(0)
-    @volatile var gen = 0
-    val writeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
-      val delta = lineitem
-        .join(batch.select(col("o_orderkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_orderkey").as("okey"))
-        .agg(count(lit(1)).as("x1"),
-          sum(col("l_quantity").cast("long")).as("x2"),
-          sum(expr(LinearModel.centsExpr)).as("cents"))
-        .selectExpr("okey", "x1", "x2", LinearModel.dollarsOfCents)
-        .agg(LinearModel.momentAggs.head, LinearModel.momentAggs.tail: _*)
-      val merged =
-        if (gen == 0) delta
-        else ss.read.parquet(stateRoot.resolve(s"v$gen").toString)
-          .unionByName(delta)
-          .agg(sum("n").as("n"),
-            sum("s1").as("s1"), sum("s2").as("s2"), sum("sy").as("sy"),
-            sum("s11").as("s11"), sum("s22").as("s22"), sum("s12").as("s12"),
-            sum("s1y").as("s1y"), sum("s2y").as("s2y"), sum("syy").as("syy"))
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(stateRoot.resolve(s"v${gen + 1}").toString)
-      gen += 1
-      lastNumBatches.incrementAndGet()
-      ()
-    }
     // moment merges are commutative sums → one-incarnation drain for the
     // declared query; the spec pins the two-incarnation resume shape
-    StreamingIndexer.drainSplitFeed(ss, staged, root.resolve("watch"),
-      root.resolve("cp"), resumeProof)(writeBatch)
-    scratch.defer(() => graft.util.Scratch.deleteRecursively(root))
-    LinearModel.solve(
-      spark.read.parquet(stateRoot.resolve(s"v$gen").toString))
+    val last = state.drain(spark, staged, resumeProof) { ss =>
+      val lineitem = Tables.lineitem(ss, sfDir)
+        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
+      (batch, prev, next) =>
+        val delta = lineitem
+          .join(batch.select(col("o_orderkey")),
+            col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("l_orderkey").as("okey"))
+          .agg(count(lit(1)).as("x1"),
+            sum(col("l_quantity").cast("long")).as("x2"),
+            sum(expr(LinearModel.centsExpr)).as("cents"))
+          .selectExpr("okey", "x1", "x2", LinearModel.dollarsOfCents)
+          .agg(LinearModel.momentAggs.head, LinearModel.momentAggs.tail: _*)
+        val merged = prev.fold(delta)(p =>
+          ss.read.parquet(p)
+            .unionByName(delta)
+            .agg(sum("n").as("n"),
+              sum("s1").as("s1"), sum("s2").as("s2"), sum("sy").as("sy"),
+              sum("s11").as("s11"), sum("s22").as("s22"), sum("s12").as("s12"),
+              sum("s1y").as("s1y"), sum("s2y").as("s2y"), sum("syy").as("syy")))
+        merged.coalesce(1).write.mode("overwrite").parquet(next)
+    }
+    LinearModel.solve(spark.read.parquet(last))
   }
 }

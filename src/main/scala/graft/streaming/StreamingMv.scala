@@ -15,9 +15,9 @@ import graft.sources.Tables
   * combine — all EXACT merges, so the maintained view is bit-identical
   * to a from-scratch batch build at every generation, and the optimizer
   * can serve from it with the same soundness guarantee. State
-  * generations are copy-on-write parquet (the [[StreamingScd2]]
-  * posture); the feed stages events as two time-ordered batches through
-  * two query incarnations over ONE checkpoint, proving resume.
+  * generations are copy-on-write parquet ([[StateGenerations]]); the
+  * feed stages events as two time-ordered batches through two query
+  * incarnations over ONE checkpoint, proving resume.
   *
   * Cells may span batches (an hour's events can arrive across many
   * micro-batches) — that is the point: the merge re-aggregates per key,
@@ -27,11 +27,10 @@ import graft.sources.Tables
   */
 object StreamingMv {
 
-  private val scratch = new graft.util.ScratchSlot
+  private val state = new StateGenerations("graft_stream_mv_")
 
   /** Spec observability: batches the last drain ran. */
-  private[graft] val lastNumBatches =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lastNumBatches = state.numBatches
 
   /** Per-batch partial cells in the view's exact-merge representation. */
   private def cells(batch: Dataset[Row]): DataFrame =
@@ -51,49 +50,30 @@ object StreamingMv {
   private[graft] def maintainedViewPath(spark: SparkSession, sfDir: String,
                                         splitAt: String = "2024-01-16",
                                         resumeProof: Boolean = false): String = {
-    import java.nio.file.Files
-    scratch.retire()
-    val root = Files.createTempDirectory("graft_stream_mv_")
-    val stateRoot = root.resolve("state")
-    // feed staging memoized per corpus state (was a per-invocation write)
+    def events = Tables.events(spark, sfDir)
+      .select(col("ts"), col("event_type"), col("value"))
+    val split = lit(splitAt).cast("timestamp")
     val staged = StreamingIndexer.ensureSplitFeed(spark,
       s"graft_mv_feed_${graft.util.Scratch.valueToken(splitAt)}_" +
         graft.util.Scratch.valueToken(sfDir),
-      graft.sources.Tables.listingSig(Tables.events(spark, sfDir)))(
-      a => Tables.events(spark, sfDir)
-        .select(col("ts"), col("event_type"), col("value"))
-        .filter(col("ts") < lit(splitAt).cast("timestamp"))
-        .coalesce(1).write.parquet(a),
-      b => Tables.events(spark, sfDir)
-        .select(col("ts"), col("event_type"), col("value"))
-        .filter(col("ts") >= lit(splitAt).cast("timestamp"))
-        .coalesce(1).write.parquet(b))
+      Tables.listingSig(Tables.events(spark, sfDir)))(
+      events.filter(col("ts") < split), events.filter(col("ts") >= split))
 
-    val ss = StreamingIndexer.drainSession(spark)
-    lastNumBatches.set(0)
-    @volatile var gen = 0
-    val writeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
+    // cell merges are commutative (sum/min/max re-aggregation) → the
+    // declared query drains one incarnation; the spec pins the
+    // two-incarnation resume shape
+    val last = state.drain(spark, staged, resumeProof) { ss => (batch, prev, next) =>
       val delta = cells(batch)
-      val merged =
-        if (gen == 0) delta
-        else ss.read.parquet(stateRoot.resolve(s"v$gen").toString)
+      val merged = prev.fold(delta)(p =>
+        ss.read.parquet(p)
           .unionByName(delta)
           .groupBy("hour_ts", "event_type")
           .agg(sum("n").as("n"),
             sum("sum_value").cast("decimal(38,2)").as("sum_value"),
             min("min_value").as("min_value"),
-            max("max_value").as("max_value"))
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(stateRoot.resolve(s"v${gen + 1}").toString)
-      gen += 1
-      lastNumBatches.incrementAndGet()
-      ()
+            max("max_value").as("max_value")))
+      merged.coalesce(1).write.mode("overwrite").parquet(next)
     }
-    // cell merges are commutative (sum/min/max re-aggregation) → the
-    // declared query drains one incarnation; the spec pins the
-    // two-incarnation resume shape
-    StreamingIndexer.drainSplitFeed(ss, staged, root.resolve("watch"),
-      root.resolve("cp"), resumeProof)(writeBatch)
     // durable copy (group-count-sized) so the rewrite registration never
     // points at this invocation's retired temp dirs. The state is already
     // single-file parquet (every generation is written coalesce(1)), so
@@ -102,8 +82,7 @@ object StreamingMv {
     val out = graft.util.Scratch.dir(spark,
       "graft_mv_stream_" + graft.util.Scratch.valueToken(sfDir))
     graft.util.Scratch.deleteRecursively(out)
-    graft.util.Scratch.hardlinkTree(stateRoot.resolve(s"v$gen").toString, out)
-    scratch.defer(() => graft.util.Scratch.deleteRecursively(root))
+    graft.util.Scratch.hardlinkTree(last, out)
     out
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Privacy
@@ -14,10 +14,10 @@ import graft.sources.Tables
   * the census is MERGEABLE ([[Privacy.censusOf]]), so the
   * continuously-maintained table equals a from-scratch batch census
   * bit-for-bit and answers the IDENTICAL `q_pii_scrub` oracle. State
-  * generations are copy-on-write parquet ([[StreamingCovariance]]'s
-  * posture); the feed stages the corpus as two doc_id-split batches
-  * through two query incarnations over ONE checkpoint (resume proven by
-  * the two-incarnation drain).
+  * generations are copy-on-write parquet ([[StateGenerations]]); the
+  * feed stages the corpus as two doc_id-split batches through two query
+  * incarnations over ONE checkpoint (resume proven by the
+  * two-incarnation drain).
   *
   * At 100 TB this is "the PII audit is always current as crawl batches
   * land" for the price of one row-local pass over each batch — state is
@@ -25,33 +25,28 @@ import graft.sources.Tables
   */
 object StreamingPii {
 
-  private val scratch = new graft.util.ScratchSlot
+  private val state = new StateGenerations("graft_stream_pii_")
 
   /** Spec observability: batches the last drain ran. */
-  private[graft] val lastNumBatches =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lastNumBatches = state.numBatches
 
   def piiCensusAvailableNow(spark: SparkSession, sfDir: String,
                             splitAt: Long = 250L,
                             resumeProof: Boolean = false): DataFrame = {
-    import java.nio.file.Files
-    scratch.retire()
-    val root = Files.createTempDirectory("graft_stream_pii_")
-    val stateRoot = root.resolve("state")
+    def docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
     val staged = StreamingIndexer.ensureSplitFeed(spark,
       s"graft_pii_feed_${splitAt}_" + graft.util.Scratch.valueToken(sfDir),
-      graft.sources.Tables.listingSig(Tables.documents(spark, sfDir)))(
-      a => Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .filter(col("doc_id") < splitAt).coalesce(1).write.parquet(a),
-      b => Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .filter(col("doc_id") >= splitAt).coalesce(1).write.parquet(b))
+      Tables.listingSig(Tables.documents(spark, sfDir)))(
+      docs.filter(col("doc_id") < splitAt), docs.filter(col("doc_id") >= splitAt))
 
-    val ss = StreamingIndexer.drainSession(spark)
-    lastNumBatches.set(0)
-    @volatile var gen = 0
-    val writeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
+    // the sum list derives from the census's own column roster: a new
+    // pattern in Privacy.PiiPatterns flows through state generations
+    // without a hand-edited list going stale
+    val sums = Privacy.CensusCols.map(c => sum(c).as(c))
+    // census merges are commutative integer sums → one-incarnation drain
+    // for the declared query; the spec pins the two-incarnation resume
+    val last = state.drain(spark, staged, resumeProof) { ss => (batch, prev, next) =>
       // the PII regex pass is the expensive per-row step and the staged
       // feed is one file per batch = a one-partition batch: spread it
       // (same scale-adaptive guard as the documents scan — a no-op on a
@@ -59,29 +54,15 @@ object StreamingPii {
       // one plan-to-RDD conversion per drain)
       val delta = Privacy.censusOf(Privacy.piiPerDocOf(
         graft.util.Spread.scan(ss, batch.toDF(), cacheKey = s"pii_feed|$staged")))
-      // the sum list derives from the census's own column roster: a new
-      // pattern in Privacy.PiiPatterns flows through state generations
-      // without a hand-edited list going stale
-      val sums = Privacy.CensusCols.map(c => sum(c).as(c))
-      val merged =
-        if (gen == 0) delta
-        else ss.read.parquet(stateRoot.resolve(s"v$gen").toString)
+      val merged = prev.fold(delta)(p =>
+        ss.read.parquet(p)
           .unionByName(delta)
           .groupBy("source")
-          .agg(sums.head, sums.tail: _*)
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(stateRoot.resolve(s"v${gen + 1}").toString)
-      gen += 1
-      lastNumBatches.incrementAndGet()
-      ()
+          .agg(sums.head, sums.tail: _*))
+      merged.coalesce(1).write.mode("overwrite").parquet(next)
     }
-    // census merges are commutative integer sums → one-incarnation drain
-    // for the declared query; the spec pins the two-incarnation resume
-    StreamingIndexer.drainSplitFeed(ss, staged, root.resolve("watch"),
-      root.resolve("cp"), resumeProof)(writeBatch)
-    scratch.defer(() => graft.util.Scratch.deleteRecursively(root))
     // counts must come back as BIGINT after the sum-merge roundtrip
-    spark.read.parquet(stateRoot.resolve(s"v$gen").toString)
+    spark.read.parquet(last)
       .select(col("source") +:
         Privacy.CensusCols.map(c => col(c).cast("long").as(c)): _*)
       .orderBy("source")

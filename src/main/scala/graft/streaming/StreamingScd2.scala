@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Events, Incremental}
@@ -13,8 +13,8 @@ import graft.sources.Tables
   * plan inside `foreachBatch`, where arbitrary stateful merges are
   * legal), and the stored dimension absorbs them: open versions extend
   * or close, new versions append, untouched users carry verbatim. State
-  * generations are copy-on-write parquet (write v(n+1), then read it
-  * next batch) so a failed batch never corrupts the current state.
+  * generations are copy-on-write parquet ([[StateGenerations]]) so a
+  * failed batch never corrupts the current state.
   *
   * The feed is staged as two time-ordered batches through two query
   * incarnations sharing one checkpoint (the [[StreamingIndexer]] resume
@@ -26,25 +26,21 @@ import graft.sources.Tables
   */
 object StreamingScd2 {
 
-  private val scratch = new graft.util.ScratchSlot
+  private val state = new StateGenerations("graft_stream_scd2_")
 
   /** Spec observability: batches the last drain ran. */
-  private[graft] val lastNumBatches =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lastNumBatches = state.numBatches
 
   def scd2AvailableNow(spark: SparkSession, sfDir: String,
                        splitAt: String = "2024-01-24 00:00:00"): DataFrame = {
-    import java.nio.file.Files
-    scratch.retire()
-    val root = Files.createTempDirectory("graft_stream_scd2_")
-    val watch = root.resolve("watch")
-    val cp = root.resolve("cp")
-    val stateRoot = root.resolve("state")
     // the two time-split batch FILES are a pure function of the corpus —
     // memoized once per corpus state (stage through Tables.events so
     // staged ts is plain µs TimestampType); each execution assembles its
     // own watch dir by HARDLINK, batch by batch, so the two-incarnation
     // resume proof is untouched while the corpus writes happen once
+    def events = Tables.events(spark, sfDir)
+      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
+    val split = lit(splitAt).cast("timestamp")
     val staged = StreamingIndexer.ensureSplitFeed(spark,
       // the split VALUE keys the name via the collision-free token (bare
       // sanitization would collapse '2024-01-01 00:00' variants differing
@@ -52,52 +48,18 @@ object StreamingScd2 {
       // silently collide across distinct parameterizations)
       s"graft_scd2_feed_${graft.util.Scratch.valueToken(splitAt)}_" +
         graft.util.Scratch.valueToken(sfDir),
-      graft.sources.Tables.listingSig(Tables.events(spark, sfDir)))(
-      a => {
-        val split = lit(splitAt).cast("timestamp")
-        Tables.events(spark, sfDir)
-          .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-          .filter(col("ts") < split).coalesce(1).write.parquet(a)
-      },
-      b => {
-        val split = lit(splitAt).cast("timestamp")
-        Tables.events(spark, sfDir)
-          .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-          .filter(col("ts") >= split).coalesce(1).write.parquet(b)
-      })
-    graft.util.Scratch.hardlinkTree(s"$staged/a", watch.resolve("a").toString)
+      Tables.listingSig(Tables.events(spark, sfDir)))(
+      events.filter(col("ts") < split), events.filter(col("ts") >= split))
 
-    val ss = StreamingIndexer.drainSession(spark)
-    val schema = ss.read.parquet(watch.resolve("a").toString).schema
-    lastNumBatches.set(0)
-    @volatile var gen = 0
-    val writeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
-      val runs = Events.scd2Of(batch.select(col("user_id"), col("event_id"),
-        expr("unix_millis(ts)").as("ms"), col("event_type")))
-      val merged =
-        if (gen == 0) runs
-        else Incremental.scd2Merge(
-          ss.read.parquet(stateRoot.resolve(s"v$gen").toString), runs)
-      merged.write.mode("overwrite")
-        .parquet(stateRoot.resolve(s"v${gen + 1}").toString)
-      gen += 1
-      lastNumBatches.incrementAndGet()
-      ()
+    // scd2Merge needs every delta event to follow every stored event per
+    // user, so the feed always drains as two incarnations (resumeProof)
+    val last = state.drain(spark, staged, resumeProof = true) { ss =>
+      (batch, prev, next) =>
+        val runs = Events.scd2Of(batch.select(col("user_id"), col("event_id"),
+          expr("unix_millis(ts)").as("ms"), col("event_type")))
+        prev.fold(runs)(p => Incremental.scd2Merge(ss.read.parquet(p), runs))
+          .write.mode("overwrite").parquet(next)
     }
-    def drain(): Unit =
-      ss.readStream.schema(schema).parquet(watch.toString + "/*")
-        .writeStream
-        .foreachBatch(writeBatch)
-        .option("checkpointLocation", cp.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-
-    drain() // incarnation 1: the base history
-    graft.util.Scratch.hardlinkTree(s"$staged/b", watch.resolve("b").toString)
-    drain() // incarnation 2 resumes the checkpoint: the delta only
-    scratch.defer(() => graft.util.Scratch.deleteRecursively(root))
-    spark.read.parquet(stateRoot.resolve(s"v$gen").toString)
-      .orderBy("user_id", "version")
+    spark.read.parquet(last).orderBy("user_id", "version")
   }
 }

@@ -27,7 +27,7 @@ object StreamingSketch {
   def cmsCellsAvailableNow(spark: SparkSession, sfDir: String,
                            width: Int = 256): DataFrame =
     StreamingIndexer.drainToTable(spark, sfDir, "events.parquet",
-      "stream_cms", cmsScratch) { (ss, watch) =>
+      cmsScratch) { (ss, watch) =>
         graft.sources.Tables.eventsStream(ss, watch, watch)
           .select(posexplode(array((0 until Sketches.Depth).map(d =>
             Sketches.bucket(col("user_id"), d, width)): _*))
@@ -50,7 +50,7 @@ object StreamingSketch {
                                   sfDir: String): DataFrame =
     graft.operators.Events.anomaliesOfHourCounts(
       StreamingIndexer.drainToTable(spark, sfDir, "events.parquet",
-        "stream_anomaly", anomalyScratch) { (ss, watch) =>
+        anomalyScratch) { (ss, watch) =>
           graft.sources.Tables.eventsStream(ss, watch, watch)
             .groupBy(expr("unix_millis(ts) div 3600000").as("hour_id"))
             .agg(count(lit(1)).as("n"))
@@ -71,7 +71,7 @@ object StreamingSketch {
                                   k: Int = 256): DataFrame =
     graft.operators.Quantiles.quantilesOfSketches(
       StreamingIndexer.drainToTable(spark, sfDir, "events.parquet",
-        "stream_quantiles", quantileScratch) { (ss, watch) =>
+        quantileScratch) { (ss, watch) =>
           graft.sources.Tables.eventsStream(ss, watch, watch)
             .where(col("value").isNotNull)
             .select(col("event_type"),

@@ -10,20 +10,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * where an executor loss mid-build must recompute from the checkpoint
   * instead of failing the job). The checkpoint DIR is a context-level
   * knob: the configured value wins, re-pointed only when a caller's conf
-  * names a DIFFERENT dir than the last claim (so sessions with distinct
-  * configured dirs each get their data under their own dir, and repeat
-  * callers pay no per-call context mutation).
+  * names a DIFFERENT dir than the last claim, so repeat callers pay no
+  * per-call context mutation. Pointing the context at a dir and
+  * checkpointing into it run under ONE lock, so sessions with distinct
+  * configured dirs truncating concurrently each get their data under
+  * their own dir (reliable checkpoints serialize; the local default
+  * never takes the lock).
   */
 object Checkpoints {
-  private val claimed =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  // the dir of the last claim; guarded by `this`
+  private var claimed: String = null
 
   def truncate(spark: SparkSession, df: DataFrame): DataFrame =
     spark.conf.getOption("spark.graft.checkpointDir") match {
-      case Some(dir) =>
-        if (claimed.getAndSet(dir) != dir)
+      case Some(dir) => synchronized {
+        if (claimed != dir) {
           spark.sparkContext.setCheckpointDir(dir)
+          claimed = dir
+        }
         df.checkpoint(true)
+      }
       case None => df.localCheckpoint(true)
     }
 }

@@ -44,4 +44,43 @@ class CheckpointsSpec extends SparkTestBase {
       graft.util.Scratch.deleteRecursively(dir)
     }
   }
+
+  test("two sessions with distinct dirs truncating concurrently keep their own dirs") {
+    val dirs = Seq("a", "b").map(n =>
+      java.nio.file.Files.createTempDirectory(s"graft_cp_race_${n}_").toString)
+    // the rdd-* checkpoint dirs each session's truncations wrote, read off
+    // the checkpointed plans
+    def ownRdds(ss: org.apache.spark.sql.SparkSession): Set[String] =
+      (1 to 4).flatMap { i =>
+        val out = graft.util.Checkpoints.truncate(ss, ss.range(20 * i).toDF())
+        out.queryExecution.logical.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD =>
+            r.rdd.getCheckpointFile
+        }.flatten.map(p => new org.apache.hadoop.fs.Path(p).getName)
+      }.toSet
+    def rddDirsUnder(dir: String): Set[String] = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir), 2)
+      try w.filter(java.nio.file.Files.isDirectory(_)).toArray
+        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith("rdd-")).toSet
+      finally w.close()
+    }
+    try {
+      val sessions = dirs.map { d =>
+        val ss = spark.newSession()
+        ss.conf.set("spark.graft.checkpointDir", d)
+        ss
+      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val own = try {
+        val futures = sessions.map(ss => pool.submit(() => ownRdds(ss)))
+        futures.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      } finally pool.shutdown()
+      dirs.zip(own).foreach { case (d, rdds) =>
+        assert(rdds.size == 4, s"expected 4 reliable checkpoints, got $rdds")
+        assert(rddDirsUnder(d) == rdds,
+          s"$d holds ${rddDirsUnder(d)}, its session wrote $rdds")
+      }
+    } finally dirs.foreach(graft.util.Scratch.deleteRecursively)
+  }
 }

@@ -25,7 +25,7 @@ class SnapshotsSpec extends SparkTestBase {
       Snapshots.commitV1(spark, sf, root)
       val before = Snapshots.readSnapshot(spark, root, 1)
         .orderBy("term", "doc_id").collect()
-      Snapshots.commitUpsertV2(spark, sf, root, amendedDoc0)
+      Snapshots.commitUpsertV2(spark, root, amendedDoc0)
       val after = Snapshots.readSnapshot(spark, root, 1)
         .orderBy("term", "doc_id").collect()
       assert(before.length > 0)
@@ -47,7 +47,7 @@ class SnapshotsSpec extends SparkTestBase {
     val root = Files.createTempDirectory("graft_snap_test_").toFile.getAbsolutePath
     try {
       Snapshots.commitV1(spark, sf, root)
-      Snapshots.commitUpsertV2(spark, sf, root, amendedDoc0)
+      Snapshots.commitUpsertV2(spark, root, amendedDoc0)
       val m1 = Snapshots.readManifest(root, 1)
       val m2 = Snapshots.readManifest(root, 2)
       assert(m1.values.forall(_ == "v1"))
