@@ -47,6 +47,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** The bench's build entries: every [[Harness.builds]] entry as
+    * `<key>_materialize`, in that order.
+    */
+  private[graft] val builds: Seq[(String, (SparkSession, String) => Unit)] =
+    Harness.builds.toSeq.map { case (k, run) => s"${k}_materialize" -> run }
+
   private[graft] def num(d: Double, dp: Int): String = {
     val s = BigDecimal(d).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
     if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse else s
@@ -143,18 +149,7 @@ object Bench {
     val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SECS", "1500").toDouble
     val wall0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wall0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // if the driver ships a ns-encoded events.parquet (it has, some rounds),
-      // read ts as raw longs for Tables.normalizeTs; harmless for µs files
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench", cpus)
 
     // Per-entry forensic stream: one JSONL row per completed entry, written
     // as it finishes — a killed run leaves a complete record of everything
@@ -223,49 +218,33 @@ object Bench {
       if (entriesSinceCanary >= 25) { entriesSinceCanary = 0; runCanary() }
     }
 
-    // DATA-MOVEMENT accounting: total shuffle bytes WRITTEN while each
-    // query executes (stage-completion metrics, bus drained before each
-    // snapshot so attribution is exact for the sequential bench). The
-    // number every scale review asks for — "how much did this query
-    // move?" — reported per query in bench_detail.json.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            spillBytes.addAndGet(m.diskBytesSpilled); ()
-          }
-        }
-      })
-    def metricsSnapshot(): (Long, Long) = {
-      org.apache.spark.graftshim.ListenerBridge
-        .waitUntilEmpty(spark.sparkContext)
-      (shuffleBytes.get(), spillBytes.get())
-    }
+    // DATA-MOVEMENT and layer accounting: shuffle bytes WRITTEN, spill,
+    // Spark jobs and task time while each query executes (bus drained
+    // before each snapshot so attribution is exact for the sequential
+    // bench). The number every scale review asks for — "how much did this
+    // query move?" — reported per query in bench_detail.json.
+    val counters = Harness.Counters(spark)
     val shuffleMb = scala.collection.mutable.Map.empty[String, Double]
     val spillMb = scala.collection.mutable.Map.empty[String, Double]
+    val jobs = scala.collection.mutable.Map.empty[String, Double]
+    val taskS = scala.collection.mutable.Map.empty[String, Double]
 
     def exec(name: String): Either[String, Double] = {
-      val (s0, p0) = metricsSnapshot()
-      val t0 = System.nanoTime()
+      val s0 = counters.snap()
       try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        // keep the LAST pass's bytes: identical across passes for a
+        val secs = Harness.noopSecs(SparkEntry.queries(name)(spark, sfDir))
+        // keep the LAST pass's layer fields: identical across passes for a
         // deterministic plan, and pass 2 excludes one-time build cost a
         // cold pass might trigger
-        val (s1, p1) = metricsSnapshot()
-        shuffleMb(name) = (s1 - s0) / 1e6
+        val d = counters.snap() - s0
+        shuffleMb(name) = d.shuffleBytes / 1e6
+        jobs(name) = d.jobs.toDouble
+        taskS(name) = d.taskMs / 1e3
         // spill is the memory-pressure signal: nonzero entries only
         // (expected all-zero at sf0.1; the map existing proves we LOOKED).
         // Unconditionally track the LAST pass — a cold-pass spill that the
         // warm pass avoids must not linger as a stale entry
-        if (p1 > p0) spillMb(name) = (p1 - p0) / 1e6
+        if (d.spillBytes > 0) spillMb(name) = d.spillBytes / 1e6
         else spillMb.remove(name)
         Right(secs)
       } catch { case e: Throwable =>
@@ -278,56 +257,12 @@ object Bench {
     exec("q_vocab_stats")
     runCanary() // baseline IO sample before any timed entry
     // every build-once materialization, timed on its own BEFORE the query
-    // passes; ordered so shared prerequisites (the shingle relation feeds
-    // the cluster labeling) are charged to their own entry
-    val builds: Seq[(String, () => Unit)] = Seq(
-      "index_materialize" ->
-        (() => { graft.operators.MaterializedIndex.ensure(spark, sfDir); () }),
-      "positional_materialize" ->
-        (() => { graft.operators.MaterializedIndex.ensurePositional(spark, sfDir); () }),
-      "shingles_materialize" ->
-        (() => { graft.operators.Dedup.ensureShingles(spark, sfDir); () }),
-      "jaccard_pairs_materialize" ->
-        (() => { graft.operators.Dedup.ensureJaccardPairs(spark, sfDir, 0.8); () }),
-      "dup_groups_materialize" ->
-        (() => { graft.operators.Dedup.ensureDupGroups(spark, sfDir); () }),
-      "dup_clusters_materialize" ->
-        (() => { graft.operators.Dedup.ensureClusters(spark, sfDir, 0.8); () }),
-      "bucketed_tables_materialize" ->
-        (() => { graft.operators.Bucketing.ensureBucketed(spark, sfDir); () }),
-      "clustered_layout_materialize" ->
-        (() => { graft.operators.Clustering.ensureClustered(spark, sfDir); () }),
-      "bloom_manifest_materialize" ->
-        (() => { graft.operators.BloomSkip.ensureBloom(spark, sfDir); () }),
-      "graph_edges_materialize" ->
-        (() => { graft.operators.Graph.ensureEdges(spark, sfDir); () }),
-      "pq_codes_materialize" ->
-        (() => { graft.operators.Similarity.ensurePqCodes(spark, sfDir); () }),
-      // staged streaming feeds (memoized per corpus): charged here so the
-      // drain queries measure pure drain cost, not corpus staging
-      "session_feed_materialize" ->
-        (() => { graft.streaming.StreamingSessionize.stageWithSentinel(spark, sfDir); () }),
-      "ssouter_feed_materialize" ->
-        (() => { graft.streaming.StreamingJoin.stageOuterFeed(spark, sfDir); () }),
-      "token_grams_materialize" ->
-        (() => { graft.operators.TextAnalysis.ensureTokenGrams(spark, sfDir); () }),
-      "scrub_counts_materialize" ->
-        (() => { graft.operators.TextAnalysis.ensureScrubCounts(spark, sfDir); () }),
-      "nb_model_materialize" ->
-        (() => { graft.operators.NaiveBayes.ensureModelGrid(spark, sfDir); () }),
-      "luma_grid_materialize" ->
-        (() => { graft.operators.Multimodal.ensureLumaGrid(spark, sfDir); () }),
-      "audio_sig_materialize" ->
-        (() => { graft.operators.Multimodal.ensureAudioSig(spark, sfDir); () }),
-      "winnow_sel_materialize" ->
-        (() => { graft.operators.TextAnalysis.ensureWinnowSelection(spark, sfDir); () }),
-      "emb_moments_materialize" ->
-        (() => { graft.operators.Covariance.ensureMomentCells(spark, sfDir); () }))
+    // passes, in Harness.builds order
     var buildSum = 0.0
     val buildSecs: Seq[(String, Double)] = builds.zipWithIndex.map {
       case ((name, run), i) =>
         val t0 = System.nanoTime()
-        run()
+        run(spark, sfDir)
         val s = (System.nanoTime() - t0) / 1e9
         buildSum += s
         logEntry(name, "build", s)
@@ -473,14 +408,11 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullQs = fmt(best ++ buildSecs.map {
       case (n, s) => n -> Right(s) }, 3)
-    val shuffleJson = shuffleMb.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + num(v, 2) }
-      .mkString("{", ",", "}")
-    val spillJson = spillMb.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + num(v, 2) }
-      .mkString("{", ",", "}")
+    def perEntry(m: scala.collection.Map[String, Double], dp: Int): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + num(v, dp) }
+        .mkString("{", ",", "}")
     val repassedJson = repassed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","cold_total":${num(coldTotal, 3)},"queries":$fullQs,"cache_hits":$cacheHitsJson,"io_canary":$canaryJson,"cold":${fmt(cold.toSeq.sortBy(_._1), 3)},"repassed":$repassedJson,"shed":$shedJson,"shuffle_mb":$shuffleJson,"spill_mb":$spillJson,"failed":$failedJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","cold_total":${num(coldTotal, 3)},"queries":$fullQs,"cache_hits":$cacheHitsJson,"io_canary":$canaryJson,"cold":${fmt(cold.toSeq.sortBy(_._1), 3)},"repassed":$repassedJson,"shed":$shedJson,"shuffle_mb":${perEntry(shuffleMb, 2)},"jobs":${perEntry(jobs, 0)},"task_s":${perEntry(taskS, 3)},"spill_mb":${perEntry(spillMb, 2)},"failed":$failedJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       (full + "\n").getBytes("UTF-8"))
     println(full) // early line: complete detail for anyone reading full stdout

@@ -54,17 +54,7 @@ object Explain {
     // honor the bench's core-count env so plan dumps reflect bench
     // conditions (the scan-spread guard keys on the slot count)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // if the driver ships a ns-encoded events.parquet (it has, some rounds),
-      // read ts as raw longs for Tables.normalizeTs; harmless for µs files
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("graft-explain", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // internal BUILD plans (the expensive one-shot materializations whose
     // serve-side declared queries read back a parquet artifact): named

@@ -100,32 +100,19 @@ object ScaleSmoke {
     * cluster labeling — each gets charged its OWN cost, and the query
     * passes below then measure pure serve.
     */
-  private val SmokeBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "shingles_build" ->
-      ((s, d) => { graft.operators.Dedup.ensureShingles(s, d); () }),
-    "dup_groups_build" ->
-      ((s, d) => { graft.operators.Dedup.ensureDupGroups(s, d); () }),
-    // LABELS BEFORE PAIRS — the consumer order a dup-heavy curation
-    // pipeline actually runs (it wants keepers, not the pair list), and
-    // the order that exercises the INCREMENTAL union-find route: with no
-    // pair relation materialized yet, the label build generates + sparse-
-    // verifies candidates itself (charged here, including the candidate
-    // artifact the pair build then reuses), instead of free-riding on
-    // the pair artifact the way the bench's build order does.
-    "dup_clusters_build" ->
-      ((s, d) => { graft.operators.Dedup.ensureClusters(s, d, 0.8); () }),
-    "jaccard_pairs_build" ->
-      ((s, d) => { graft.operators.Dedup.ensureJaccardPairs(s, d, 0.8); () }),
-    "graph_edges_build" ->
-      ((s, d) => { graft.operators.Graph.ensureEdges(s, d); () }),
-    "pq_codes_build" ->
-      ((s, d) => { graft.operators.Similarity.ensurePqCodes(s, d); () }),
-    // multimodal decode tiers (real JVM codec passes over the replicated
-    // fixture assets — the r17 mod-2³² id-mix fix runs at replica ids here)
-    "luma_grid_build" ->
-      ((s, d) => { graft.operators.Multimodal.ensureLumaGrid(s, d); () }),
-    "audio_sig_build" ->
-      ((s, d) => { graft.operators.Multimodal.ensureAudioSig(s, d); () }))
+  private[graft] val SmokeBuilds: Seq[(String, (SparkSession, String) => Unit)] =
+    Seq("shingles", "dup_groups",
+      // LABELS BEFORE PAIRS — the consumer order a dup-heavy curation
+      // pipeline actually runs (it wants keepers, not the pair list), and
+      // the order that exercises the INCREMENTAL union-find route: with no
+      // pair relation materialized yet, the label build generates + sparse-
+      // verifies candidates itself (charged here, including the candidate
+      // artifact the pair build then reuses), instead of free-riding on
+      // the pair artifact the way the bench's build order does.
+      "dup_clusters", "jaccard_pairs", "graph_edges", "pq_codes",
+      // multimodal decode tiers (real JVM codec passes over the replicated
+      // fixture assets — the r17 mod-2³² id-mix fix runs at replica ids here)
+      "luma_grid", "audio_sig").map(k => s"${k}_build" -> Harness.builds(k))
 
   private val SmokeQueries = Seq(
     "q1_pricing",            // the scan-agg baseline
@@ -155,16 +142,7 @@ object ScaleSmoke {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-scale-smoke", cpus)
 
     // Join mix of the EXECUTED plans (AQE-final: captured after runtime
     // replans, not at planning time), ACCUMULATED across every action of
@@ -270,12 +248,7 @@ object ScaleSmoke {
         s.read.parquet(graft.operators.Dedup.ensureShingles(s, d)).count()))
 
     def time(name: String, dir: String): (Double, String) = {
-      def once(): Double = {
-        val t = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t) / 1e9
-      }
+      def once(): Double = Harness.noopSecs(SparkEntry.queries(name)(spark, dir))
       val first = once()
       resetJoinMix() // mix = ALL actions of the second (warm) pass only
       val best = math.min(first, once())
@@ -358,12 +331,8 @@ object ScaleSmoke {
         def timeEdges(dir: String, salt: Int): Double = {
           spark.conf.set("spark.graft.copurchaseSalt", salt.toString)
           try {
-            def once(): Double = {
-              val t = System.nanoTime()
-              graft.operators.Graph.copurchaseEdges(spark, dir)
-                .write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t) / 1e9
-            }
+            def once(): Double =
+              Harness.noopSecs(graft.operators.Graph.copurchaseEdges(spark, dir))
             math.min(once(), once())
           } finally spark.conf.set("spark.graft.copurchaseSalt", "0")
         }

@@ -6,60 +6,95 @@ import org.apache.spark.sql.SparkSession
   * 11-minute full bench: `runMain graft.Time <sfDir> <entry> [entry ...]`
   * where an entry is a query name (2 passes, min reported — the bench's
   * protocol) or `build:<name>` for a one-time materialization (1 pass;
-  * run in a fresh JVM, builds memoize). Prints one `name=secs` line per
-  * entry plus shuffle MB, in execution order.
+  * run in a fresh JVM, builds memoize). Prints one `TIME name=secs` line
+  * per entry, in execution order, with shuffle MB and the Spark jobs,
+  * stages and task time of the (warm) pass; an entry whose pass streamed
+  * also gets its query starts, micro-batches and summed `durationMs`
+  * phases (queryPlanning, walCommit, addBatch, commitOffsets, ...).
+  * `GRAFT_TIME_STAGES` set prints one `STAGE` line per completed stage.
   */
 object Time {
+
+  // decomposition probes, run as `build:<name>` beside Harness.builds
+  private val probes: Map[String, (SparkSession, String) => Unit] = Map(
+    // presentation-sort overhead probe: the same tiny aggregate, with
+    // and without a global orderBy, 10 reps each — isolates what a
+    // final sort costs a small-output query (range-exchange planning,
+    // sampling pass, one more AQE stage)
+    "sort_probe" -> ((spark, sfDir) => {
+      import org.apache.spark.sql.functions._
+      val agg = graft.sources.Tables.documents(spark, sfDir)
+        .groupBy("lang").agg(count(lit(1)).as("n"))
+      def rep(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
+        Harness.noopSecs(df) // warm
+        val secs = (1 to 10).map(_ => Harness.noopSecs(df)).sum
+        println(f"PROBE $label=${secs / 10}%.3f s/exec")
+      }
+      rep(agg, "agg_plain")
+      rep(agg.orderBy("lang"), "agg_orderby")
+      rep(agg.coalesce(1).sortWithinPartitions("lang"), "agg_coalesce_sort")
+    }),
+    // decomposition probes for the co-purchase graph build
+    "copurchase_edges_noop" -> ((spark, sfDir) => {
+      Harness.noopSecs(graft.operators.Graph.copurchaseEdges(spark, sfDir)); ()
+    }),
+    // decomposition probes for the cluster build
+    "pairs_noop" -> ((spark, sfDir) => {
+      Harness.noopSecs(graft.operators.Dedup.ngramJaccardPairs(spark, sfDir, 0.8)
+        .select("doc_a", "doc_b")); ()
+    }),
+    "cc_from_pairs" -> ((spark, sfDir) => {
+      val p = s"${System.getProperty("java.io.tmpdir")}/graft_time_pairs"
+      graft.operators.Dedup.ngramJaccardPairs(spark, sfDir, 0.8)
+        .select("doc_a", "doc_b").write.mode("overwrite").parquet(p)
+      val secs = Harness.noopSecs(
+        graft.operators.Dedup.dupClustersFromPairs(spark, spark.read.parquet(p)))
+      println(f"TIME cc_inner=$secs%.3f " +
+        s"rounds=${graft.operators.Dedup.lastCcRounds.get}")
+    }))
+
+  /** The layer fields of one pass, Spark and (when it streamed) micro-batch. */
+  private def layers(d: Harness.Snap, prefix: String): String = {
+    val streamed =
+      if (d.starts == 0 && d.batches == 0) ""
+      else s" starts=${d.starts} batches=${d.batches} | " +
+        d.phaseMs.toSeq.sortBy(-_._2)
+          .map { case (k, v) => f"$k=${v / 1e3}%.2f" }.mkString(" ")
+    s"${prefix}jobs=${d.jobs} ${prefix}stages=${d.stages} " +
+      f"${prefix}task_s=${d.taskMs / 1e3}%.2f" + streamed
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-time")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // A/B experimentation hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" lets a
     // measurement run flip session confs without a recompile.
     // segments without '=' (including the empty string, which split(';')
     // yields as Array("")) are skipped with a warning instead of crashing
     // the harness with an opaque MatchError
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-        case _ => if (kv.trim.nonEmpty)
-          System.err.println(s"[time] ignoring malformed extra conf '$kv'")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Empirical decomposition (guide §1.1): per-entry Spark JOB count
-    // (eager actions + the final sink), STAGE count (shuffle boundaries ×
-    // retries) and summed task time — the signal separating fixed
-    // job-submission overhead from real compute in a 1–3 s entry.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stageCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet(); ()
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';')).flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => Some(k.trim -> v.trim)
+          case _ =>
+            if (kv.trim.nonEmpty)
+              System.err.println(s"[time] ignoring malformed extra conf '$kv'")
+            None
         }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stageCount.incrementAndGet()
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) {
-            taskTimeMs.addAndGet(m.executorRunTime)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            if (sys.env.contains("GRAFT_TIME_STAGES")) {
-              val si = sc.stageInfo
+      }
+    val spark = Harness.session("graft-time",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), extra)
+    val counters = Harness.Counters(spark)
+    // opt-in per-stage decomposition: task time, CPU, deserialization
+    // and GC, with the graft call site that submitted the stage
+    if (sys.env.contains("GRAFT_TIME_STAGES"))
+      spark.sparkContext.addSparkListener(
+        new org.apache.spark.scheduler.SparkListener {
+          override def onStageCompleted(
+              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+            val si = sc.stageInfo
+            val m = si.taskMetrics
+            if (m != null)
               println(f"  STAGE ${si.stageId}%4d tasks=${si.numTasks}%3d " +
                 f"run_s=${m.executorRunTime / 1e3}%7.2f " +
                 f"cpu_s=${m.executorCpuTime / 1e9}%7.2f " +
@@ -68,109 +103,31 @@ object Time {
                 s"${si.name.takeWhile(_ != '(').trim} @ ${si.details.linesIterator.toSeq
                   .find(l => l.contains("graft") && !l.contains("graft.Time"))
                   .getOrElse("").trim}")
-            }
-            ()
           }
-        }
-      })
-    def snap(): (Long, Long, Long, Long) = {
-      org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      (shuffleBytes.get(), jobCount.get(), stageCount.get(), taskTimeMs.get())
-    }
-
-    val builds: Map[String, () => Unit] = Map(
-      "shingles" -> (() => { graft.operators.Dedup.ensureShingles(spark, sfDir); () }),
-      "dup_clusters" -> (() => { graft.operators.Dedup.ensureClusters(spark, sfDir, 0.8); () }),
-      "scrub_counts" -> (() => { graft.operators.TextAnalysis.ensureScrubCounts(spark, sfDir); () }),
-      "pq_codes" -> (() => { graft.operators.Similarity.ensurePqCodes(spark, sfDir); () }),
-      "token_grams" -> (() => { graft.operators.TextAnalysis.ensureTokenGrams(spark, sfDir); () }),
-      // the remaining Bench one-time materializations, timeable one at a
-      // time in a fresh JVM (builds memoize per process)
-      "index" -> (() => { graft.operators.MaterializedIndex.ensure(spark, sfDir); () }),
-      "positional" -> (() => { graft.operators.MaterializedIndex.ensurePositional(spark, sfDir); () }),
-      "jaccard_pairs" -> (() => { graft.operators.Dedup.ensureJaccardPairs(spark, sfDir, 0.8); () }),
-      "dup_groups" -> (() => { graft.operators.Dedup.ensureDupGroups(spark, sfDir); () }),
-      "bucketed" -> (() => { graft.operators.Bucketing.ensureBucketed(spark, sfDir); () }),
-      "clustered" -> (() => { graft.operators.Clustering.ensureClustered(spark, sfDir); () }),
-      "bloom" -> (() => { graft.operators.BloomSkip.ensureBloom(spark, sfDir); () }),
-      "graph_edges" -> (() => { graft.operators.Graph.ensureEdges(spark, sfDir); () }),
-      "session_feed" -> (() => { graft.streaming.StreamingSessionize.stageWithSentinel(spark, sfDir); () }),
-      "ssouter_feed" -> (() => { graft.streaming.StreamingJoin.stageOuterFeed(spark, sfDir); () }),
-      "nb_model" -> (() => { graft.operators.NaiveBayes.ensureModelGrid(spark, sfDir); () }),
-      "luma_grid" -> (() => { graft.operators.Multimodal.ensureLumaGrid(spark, sfDir); () }),
-      "audio_sig" -> (() => { graft.operators.Multimodal.ensureAudioSig(spark, sfDir); () }),
-      "winnow_sel" -> (() => { graft.operators.TextAnalysis.ensureWinnowSelection(spark, sfDir); () }),
-      "emb_moments" -> (() => { graft.operators.Covariance.ensureMomentCells(spark, sfDir); () }),
-      // presentation-sort overhead probe: the same tiny aggregate, with
-      // and without a global orderBy, 10 reps each — isolates what a
-      // final sort costs a small-output query (range-exchange planning,
-      // sampling pass, one more AQE stage)
-      "sort_probe" -> (() => {
-        import org.apache.spark.sql.functions._
-        val agg = graft.sources.Tables.documents(spark, sfDir)
-          .groupBy("lang").agg(count(lit(1)).as("n"))
-        def rep(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-          df.write.format("noop").mode("overwrite").save() // warm
-          val t0 = System.nanoTime()
-          (1 to 10).foreach { _ =>
-            df.write.format("noop").mode("overwrite").save()
-          }
-          println(f"PROBE $label=${(System.nanoTime() - t0) / 1e10}%.3f s/exec")
-        }
-        rep(agg, "agg_plain")
-        rep(agg.orderBy("lang"), "agg_orderby")
-        rep(agg.coalesce(1).sortWithinPartitions("lang"), "agg_coalesce_sort")
-      }),
-      // decomposition probes for the co-purchase graph build
-      "copurchase_edges_noop" -> (() => {
-        graft.operators.Graph.copurchaseEdges(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      }),
-      // decomposition probes for the cluster build
-      "pairs_noop" -> (() => {
-        graft.operators.Dedup.ngramJaccardPairs(spark, sfDir, 0.8)
-          .select("doc_a", "doc_b")
-          .write.format("noop").mode("overwrite").save()
-      }),
-      "cc_from_pairs" -> (() => {
-        val p = s"${System.getProperty("java.io.tmpdir")}/graft_time_pairs"
-        graft.operators.Dedup.ngramJaccardPairs(spark, sfDir, 0.8)
-          .select("doc_a", "doc_b").write.mode("overwrite").parquet(p)
-        val t = System.nanoTime()
-        graft.operators.Dedup.dupClustersFromPairs(spark, spark.read.parquet(p))
-          .write.format("noop").mode("overwrite").save()
-        println(f"TIME cc_inner=${(System.nanoTime() - t) / 1e9}%.3f " +
-          s"rounds=${graft.operators.Dedup.lastCcRounds.get}")
-      }))
+        })
 
     // warmup
-    try SparkEntry.queries("q_vocab_stats")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
+    try Harness.noopSecs(SparkEntry.queries("q_vocab_stats")(spark, sfDir))
     catch { case _: Throwable => () }
 
     names.foreach { n =>
-      val t0 = System.nanoTime(); val s0 = snap()
+      val s0 = counters.snap()
       if (n.startsWith("build:")) {
-        builds(n.stripPrefix("build:"))()
+        val key = n.stripPrefix("build:")
+        val t0 = System.nanoTime()
+        Harness.builds.getOrElse(key, probes(key))(spark, sfDir)
         val secs = (System.nanoTime() - t0) / 1e9
-        val s1 = snap()
-        println(f"TIME $n=$secs%.3f shuffle_mb=${(s1._1 - s0._1) / 1e6}%.1f " +
-          s"jobs=${s1._2 - s0._2} stages=${s1._3 - s0._3} " +
-          f"task_s=${(s1._4 - s0._4) / 1e3}%.2f")
+        val d = counters.snap() - s0
+        println(f"TIME $n=$secs%.3f shuffle_mb=${d.shuffleBytes / 1e6}%.1f " +
+          layers(d, ""))
       } else {
-        def pass(): (Double, (Long, Long, Long, Long)) = {
-          val p0 = snap()
-          val t = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t) / 1e9, p0)
-        }
-        val (a, _) = pass(); val (b, w0) = pass()
-        val s1 = snap()
+        val a = Harness.noopSecs(SparkEntry.queries(n)(spark, sfDir))
+        val w0 = counters.snap()
+        val b = Harness.noopSecs(SparkEntry.queries(n)(spark, sfDir))
+        val s1 = counters.snap()
         println(f"TIME $n=${math.min(a, b)}%.3f cold=$a%.3f " +
-          f"shuffle_mb=${(s1._1 - s0._1) / 1e6}%.1f " +
-          s"warm_jobs=${s1._2 - w0._2} warm_stages=${s1._3 - w0._3} " +
-          f"warm_task_s=${(s1._4 - w0._4) / 1e3}%.2f")
+          f"shuffle_mb=${(s1.shuffleBytes - s0.shuffleBytes) / 1e6}%.1f " +
+          layers(s1 - w0, "warm_"))
       }
     }
     spark.stop()

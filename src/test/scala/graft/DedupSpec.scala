@@ -319,6 +319,9 @@ class DedupSpec extends SparkTestBase {
     }
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // listener events are delivered asynchronously: drain the bus before
+    // registering (no earlier test's jobs) and after the rounds (all of ours)
+    org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     val labels =
       try {
@@ -329,15 +332,7 @@ class DedupSpec extends SparkTestBase {
         spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       }
-    // listener events are delivered asynchronously — poll until stable
-    var last = -1
-    var stable = 0
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (stable < 3 && System.nanoTime() < deadline) {
-      val now = jobs.get()
-      if (now == last) stable += 1 else { stable = 0; last = now }
-      Thread.sleep(200)
-    }
+    org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() <= 8,
       s"propagation used ${jobs.get()} jobs for 5 rounds — " +

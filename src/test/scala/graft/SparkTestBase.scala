@@ -4,22 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession per suite (lazy; reused across suites within
-  * the same JVM via getOrCreate).
+  * the same JVM via getOrCreate), built with the harness mains' conf list.
+  * The slot count is a literal, so a host's SPARK_GRAFT_CPUS never reaches
+  * the tests.
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // if the driver ships a ns-encoded events.parquet (it has, some rounds),
-      // read ts as raw longs for Tables.normalizeTs; harmless for µs files
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session("graft-test", "4")
   val sf: String = "/root/testdata/sf0.001"
 }
