@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.functions.TextFunctions._
 import graft.sources.Tables
@@ -157,52 +158,92 @@ object IndexQueries {
         approx_count_distinct(col("term"), 0.01).as("approx_vocab"))
       .orderBy("lang")
 
+  /** The layout of the per-document length memo: (doc_id, dl = Σ tf). */
+  private val docLengthSchema: StructType = new StructType()
+    .add("doc_id", LongType).add("dl", LongType)
+
+  /** (avgdl, n_docs) per document-length memo path, computed once per
+    * generation — the path embeds the index's `_base_sig`, so a rebuilt
+    * index lands on a fresh key.
+    */
+  private val docLengthStats =
+    scala.collection.concurrent.TrieMap[String, (Double, Long)]()
+
+  /** Document lengths of the materialized index of `sfDir`, with the two
+    * corpus scalars BM25 normalizes by: the memo path of (doc_id, dl),
+    * avgdl and n_docs. They are per-corpus constants, so they are
+    * aggregated once per index generation (keyed on the index path plus
+    * its `_base_sig`) and reused by every query after it, the
+    * incremental reuse across interactive queries of *Incremental Based
+    * Framework for Efficient Top-K Similarity Search in Interactive Data
+    * Analysis Sessions* (EDBT 2020). The memo lives under the scratch
+    * root, not inside the index directory, so the index files stay
+    * exactly what the index writer left.
+    */
+  private[graft] def docLengths(spark: SparkSession,
+                                sfDir: String): (String, Double, Long) = {
+    val index = MaterializedIndex.ensure(spark, sfDir)
+    val sig = MaterializedIndex.baseSigAt(index).getOrElse(
+      throw new IllegalStateException(s"index at $index has no signature"))
+    val path = graft.util.Scratch.memoizedDir(spark,
+      "graft_doclen_" + graft.util.Scratch.valueToken(index), sig) { out =>
+      Indexer.readIndex(spark, index)
+        .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+        .write.mode("overwrite").parquet(out)
+    }
+    val (avgdl, nDocs) = docLengthStats.getOrElseUpdate(path, {
+      val r = spark.read.schema(docLengthSchema).parquet(path)
+        .agg(sum(col("dl")), count(lit(1))).head()
+      val n = r.getLong(1)
+      (if (n == 0) 0.0 else r.getLong(0).toDouble / n, n)
+    })
+    (path, avgdl, nDocs)
+  }
+
   /** BM25 ranking (Robertson–Spärck Jones, k1=1.2, b=0.75) served from
     * the materialized index — the standard retrieval scorer a tf-idf-only
-    * engine is missing. Everything derives from postings: document
-    * lengths (one sum per doc), the corpus stats (two scalars,
-    * crossJoin-broadcast), per-term document frequencies (only the query
-    * terms' postings are read). Scoring is a projection over the query
-    * terms' posting lists; the global top-k is a TakeOrdered. Work scales
-    * with the query terms' posting lists — never the corpus. Jobs (8 warm
-    * at test scale, pinned in JobBudgetSpec) are the aggregations' map
-    * stages, the broadcasts and the result; the postings read declares its
-    * schema, so none infers one.
+    * engine is missing. Document lengths and the corpus scalars (avgdl,
+    * n_docs) come from [[docLengths]], computed once per index
+    * generation; the scalars enter the plan as literals. Per-term
+    * document frequencies are a count window over the query terms'
+    * postings (unique per (term, doc_id)). ONE Spark job per call, warm
+    * (pinned in JobBudgetSpec), and no exchange: the letter-pruned scan
+    * of the query terms' postings feeds one partition, which satisfies
+    * the df window, the shuffle-hash join against the document lengths
+    * and the per-document score sum; the top-k is a TakeOrdered.
+    *
+    * The scale trade: one task builds a hash table of the query terms'
+    * postings and streams the O(documents) length rows past it, where
+    * the per-query aggregation this replaces shuffled O(postings) rows of
+    * the whole index on every call. Once a join side's size estimate
+    * passes `spark.sql.maxSinglePartitionBytes`, Spark plans exchanges
+    * under the join for parallelism: more jobs, the same answer.
     */
   def bm25TopK(spark: SparkSession, sfDir: String, terms: Seq[String],
                k: Int): DataFrame = {
-    val post = MaterializedIndex.postings(spark, sfDir)
-    // the explicit isNotNull mirrors the null filter the doc_id join pushes
-    // into ITS dl branch — with both branches byte-identical, ReuseExchange
-    // shares ONE per-doc aggregation between the join and the stats scalar
-    // instead of shuffling the postings by doc_id twice (doc_id is never
-    // null in the index, so the filter is semantically free)
-    val dl = post.filter(col("doc_id").isNotNull)
-      .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
-      count(lit(1)).as("n_docs"))
-    val qpost = post.filter(col("term").isin(terms: _*))
-    // postings rows are unique (term, doc_id): count(*) IS the document
-    // frequency. One row per query term → always broadcast-safe, so the
-    // df join costs no exchange of the posting lists
-    val dfreq = qpost.groupBy("term").agg(count(lit(1)).as("df"))
-    qpost
-      .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
+    val ts = terms.distinct
+    val letters = ts.map(_.take(1)).distinct
+    val (dlPath, avgdl, nDocs) = docLengths(spark, sfDir)
+    val qpost = Indexer.readIndex(spark, MaterializedIndex.ensure(spark, sfDir))
+      .filter(col("first_letter").isin(letters: _*) && col("term").isin(ts: _*))
+      .select("term", "doc_id", "tf")
+      .coalesce(1)
+      // postings rows are unique (term, doc_id): count(*) IS the document
+      // frequency
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .withColumn("idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      // big relation LAST: dl keeps the doc_id hash partitioning of its
-      // aggregation, the scored query postings are the side that moves,
-      // and the final per-doc sum rides the join's output partitioning —
-      // no exchange in this plan ever moves the full dl relation again
-      .join(dl, "doc_id")
+        log((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+    // hinted: unhinted, the planner broadcasts the smaller side, and a
+    // broadcast is a job of its own
+    qpost.hint("shuffle_hash")
+      .join(spark.read.schema(docLengthSchema).parquet(dlPath).coalesce(1),
+        "doc_id")
       // constants written exactly as in the oracle SQL (k1=1.2, b=0.75,
       // k1+1 as the literal 2.2) so both engines fold identical doubles
       .withColumn("s",
         col("idf") * col("tf") * lit(2.2) /
           (col("tf") + lit(1.2) *
-            (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / col("avgdl"))))
+            (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / lit(avgdl))))
       .groupBy("doc_id")
       .agg(round(sum(col("s")), 6).as("score"))
       .orderBy(desc("score"), col("doc_id"))

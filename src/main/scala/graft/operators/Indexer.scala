@@ -26,15 +26,16 @@ import graft.sources.Tables
   * — the same shape the reference hand-codes, but spillable, codegen'd and
   * AQE-balanced.
   *
-  * Serving cost: a served lookup ([[lookupInIndex]]) is TWO Spark jobs —
-  * the shuffle map stage of the single-partition result exchange (the
-  * pruned letter scan, still parallel over its files) and the result
-  * stage that sorts the posting list inside that one partition. Every
-  * index read declares its layout's schema ([[readIndex]]), so no job
-  * samples a parquet footer; and the result is ordered in one partition
-  * rather than by a global sort, whose range exchange would add a
-  * sampling job for boundaries nobody needs when the caller collects one
-  * small list anyway.
+  * Serving cost: a served lookup ([[lookupInIndex]]) is ONE Spark job.
+  * The pruned letter scan feeds one partition directly (a coalesce, no
+  * exchange), and that one task sorts the posting list. The result is
+  * collected whole, so a parallel scan followed by a one-partition
+  * exchange would only add a map-stage job and save no work. The scale
+  * trade: the scan is one task over at most [[filesPerLetter]] files of
+  * the term's letter, with row-group skips on the sorted `term` column,
+  * so its cost is bounded by one letter's files, not by the corpus.
+  * Every index read declares its layout's schema ([[readIndex]]), so no
+  * job samples a parquet footer.
   */
 object Indexer {
 
@@ -207,14 +208,15 @@ object Indexer {
     * the `first_letter` predicate prunes the scan to one partition
     * directory — exactly the reference's "open only `./index/<c>`"
     * (`helper_reduce.c:238-242`), but enforced by Catalyst's partition
-    * pruning (asserted in IndexerSpec). Two jobs per call (see the object
-    * doc): the scan feeds one partition, which sorts the posting list.
+    * pruning (asserted in IndexerSpec). One job per call (see the object
+    * doc): the pruned scan is coalesced into one task, which sorts the
+    * posting list; the scan reads at most [[filesPerLetter]] files.
     */
   def lookupInIndex(spark: SparkSession, indexPath: String, term: String): DataFrame =
     readIndex(spark, indexPath)
       .filter(col("first_letter") === term.take(1) && col("term") === term)
       .select("term", "doc_id", "tf")
-      .repartition(1)
+      .coalesce(1)
       .sortWithinPartitions(desc("tf"), col("doc_id"))
 
   /** Term lookup: postings for one term, highest-tf first — the query the
@@ -229,16 +231,20 @@ object Indexer {
 
   /** Multi-term AND: documents containing ALL the given terms.
     * filter + groupBy(doc) + countDistinct(term) == n — one shuffle,
-    * no self-join chain (SURVEY.md §2.1).
+    * no self-join chain (SURVEY.md §2.1). A repeated term is one
+    * condition: the distinct count can never reach a length that counts
+    * it twice.
     */
-  def multiTermAnd(spark: SparkSession, sfDir: String, terms: Seq[String]): DataFrame =
+  def multiTermAnd(spark: SparkSession, sfDir: String, terms: Seq[String]): DataFrame = {
+    val ts = terms.distinct
     postings(spark, sfDir)
-      .filter(col("term").isin(terms: _*))
+      .filter(col("term").isin(ts: _*))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).as("n_terms"), sum(col("tf")).as("total_tf"))
-      .filter(col("n_terms") === terms.length)
+      .filter(col("n_terms") === ts.length)
       .select("doc_id", "total_tf")
       .orderBy(desc("total_tf"), col("doc_id"))
+  }
 
   /** tf-idf ranking, top-k documents per term (SURVEY.md §2.1).
     * idf = ln(N / df). Postings rows are unique (term, doc_id) by

@@ -19,22 +19,24 @@ import org.apache.spark.sql.types._
   * the 26 files". At cluster scale the path would be shared storage and the
   * build a scheduled job; the query plans are identical.
   *
-  * Spark jobs per served query, warm (pinned in JobBudgetSpec):
-  *  - [[termLookup]]: 2 — the map stage of the single-partition result
-  *    exchange (the pruned letter scan, parallel over its files) and the
-  *    result stage that sorts the posting list in that partition.
-  *  - [[prefixSearch]]: 2 — the map stage of the aggregate's exchange and
-  *    the result stage, which runs the final aggregate coalesced to one
-  *    partition and sorts there.
-  *  - [[multiTermAnd]]: 3 — as prefixSearch, but its distinct count plans
-  *    two aggregate exchanges, so two map stages.
-  *  - [[servePhrase]]: 3 for two words at test scale — the broadcast of
-  *    one posting list for the join, the map stage of the one-partition
-  *    result exchange, and the result stage.
+  * Spark jobs per served query, warm (pinned in JobBudgetSpec): ONE for
+  * each of [[termLookup]], [[multiTermAnd]], [[prefixSearch]] and
+  * [[servePhrase]] (any phrase length), and for
+  * [[IndexQueries.bm25TopK]]. No served plan holds an exchange. Each
+  * result is collected whole and its scan is already pruned to the query
+  * letters, so the pruned scan feeds one partition directly (a coalesce),
+  * and that one partition satisfies every aggregate, window and join
+  * above it. A parallel scan followed by a one-partition exchange would
+  * add a map-stage job and save no work. A phrase is one aggregate over
+  * its words' unioned posting lists, not a chain of joins (see
+  * [[servePhrase]]).
+  *
+  * The scale trade: each served scan is one task over at most
+  * [[Indexer.filesPerLetter]] files per query letter, with row-group
+  * skips on the sorted `term` column (bounded in ServedScanSpec). Its
+  * cost grows with the query letters' files, not with the corpus.
   * No read infers its schema (one job each): every index path is read
-  * through [[Indexer.readIndex]] with its layout's declared schema. No
-  * served result is ordered by a global sort (a sampling job plus a range
-  * exchange): it is collected whole, so it is sorted inside one partition.
+  * through [[Indexer.readIndex]] with its layout's declared schema.
   */
 object MaterializedIndex {
 
@@ -177,16 +179,19 @@ object MaterializedIndex {
     */
   def multiTermAnd(spark: SparkSession, sfDir: String,
                    terms: Seq[String]): DataFrame = {
-    val letters = terms.map(_.take(1)).distinct
+    // a repeated term is one condition, not two
+    val ts = terms.distinct
+    val letters = ts.map(_.take(1)).distinct
     Indexer.readIndex(spark, ensure(spark, sfDir))
       .filter(col("first_letter").isin(letters: _*) &&
-        col("term").isin(terms: _*))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("term")).as("n_terms"),
-        sum(col("tf")).as("total_tf"))
-      .filter(col("n_terms") === terms.length)
-      .select("doc_id", "total_tf")
+        col("term").isin(ts: _*))
       .coalesce(1)
+      // postings are unique per (term, doc_id) and the terms are distinct,
+      // so a plain count per document is the number of query terms it holds
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_terms"), sum(col("tf")).as("total_tf"))
+      .filter(col("n_terms") === ts.length)
+      .select("doc_id", "total_tf")
       .sortWithinPartitions(desc("total_tf"), col("doc_id"))
   }
 
@@ -204,11 +209,11 @@ object MaterializedIndex {
     Indexer.readIndex(spark, ensure(spark, sfDir))
       .filter(col("first_letter") === prefix.take(1) &&
         col("term").startsWith(prefix))
+      .coalesce(1)
       // postings are unique per (term, doc_id) by construction, so the
       // document frequency is a plain count
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))
-      .coalesce(1)
       .sortWithinPartitions("term")
 
   private val posBuilt = scala.collection.concurrent.TrieMap[String, String]()
@@ -249,33 +254,43 @@ object MaterializedIndex {
   }
 
   /** Phrase search SERVED from the positional index: prune to the
-    * phrase's letters, join the n posting lists on doc_id (each list is
-    * one pruned partition read), and intersect position sets shifted by
-    * word offset — a phrase occurrence is a start position p with
-    * p+i ∈ positions(wordᵢ) for every i. Work is proportional to the
-    * phrase words' posting lists, never the corpus; equality with the
-    * corpus-scan [[IndexQueries.phraseSearch]] is oracle-checked.
+    * phrase's letters, read each word's posting list (one pruned partition
+    * read each) with its positions shifted back by the word's offset, and
+    * intersect a document's shifted position sets — a phrase occurrence is
+    * a start position p with p+i ∈ positions(wordᵢ) for every i. Work is
+    * proportional to the phrase words' posting lists, never the corpus;
+    * equality with the corpus-scan [[IndexQueries.phraseSearch]] is
+    * oracle-checked.
+    *
+    * The posting lists are unioned into one partition and grouped by
+    * document, so a phrase of any length is one aggregate and ONE job. A
+    * fold of pairwise joins is not: Spark re-shuffles both sides of a join
+    * of single partitions once either side's size estimate exceeds
+    * `spark.sql.maxSinglePartitionBytes`, and a join's estimate is the
+    * product of its inputs', so from the third word on every join paid
+    * two exchanges.
     */
   def servePhrase(spark: SparkSession, sfDir: String,
                   phrase: String): DataFrame = {
     val words = phrase.split(" ").toSeq
     val idx = Indexer.readIndex(spark, ensurePositional(spark, sfDir),
       positionalIndexSchema)
-    def rel(w: String, i: Int) = idx
-      .filter(col("first_letter") === w.take(1) && col("term") === w)
+    val shifted = words.zipWithIndex.map { case (w, i) =>
+      idx.filter(col("first_letter") === w.take(1) && col("term") === w)
+        .select(col("doc_id"),
+          (if (i == 0) col("positions")
+           else transform(col("positions"), p => p - i)).as("p"))
+    }.reduce(_ union _)
+    // postings are unique per (term, doc_id), so a document holds the
+    // whole phrase's words iff it has one row per word
+    shifted.coalesce(1)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_words"), collect_list(col("p")).as("ps"))
+      .filter(col("n_words") === words.length)
       .select(col("doc_id"),
-        (if (i == 0) col("positions")
-         else transform(col("positions"), p => p - i)).as(s"p$i"))
-    val joined = words.zipWithIndex.tail.foldLeft(rel(words.head, 0)) {
-      case (acc, (w, i)) =>
-        acc.join(rel(w, i), "doc_id")
-          .select(col("doc_id"),
-            array_intersect(col("p0"), col(s"p$i")).as("p0"))
-    }
-    joined
-      .select(col("doc_id"), size(col("p0")).cast("long").as("n_occurrences"))
+        size(aggregate(col("ps"), col("ps")(0),
+          (acc, p) => array_intersect(acc, p))).cast("long").as("n_occurrences"))
       .filter(col("n_occurrences") > 0)
-      .repartition(1)
       .sortWithinPartitions(desc("n_occurrences"), col("doc_id"))
   }
 }

@@ -50,7 +50,10 @@ object Snapshots {
     * directory, read each directory restricted to ITS letters (basePath
     * keeps the partition column), and union. The plan only ever lists the
     * files the manifest names — a letter rewritten by a later version is
-    * invisible to an earlier snapshot.
+    * invisible to an earlier snapshot. Every version directory holds the
+    * term index layout, so each read declares [[Indexer.termIndexSchema]]
+    * instead of running a job to infer it, and `first_letter` is a string
+    * even for a digit letter.
     */
   def readSnapshot(spark: SparkSession, root: String, v: Int): DataFrame =
     readManifest(root, v)
@@ -59,9 +62,9 @@ object Snapshots {
         val base = new File(root, dir).getAbsolutePath
         val paths = letters.keys.toSeq.sorted
           .map(l => s"$base/first_letter=$l")
-        spark.read.option("basePath", base).parquet(paths: _*)
-          .select(col("first_letter").cast("string").as("first_letter"),
-            col("term"), col("doc_id"), col("tf"))
+        spark.read.schema(Indexer.termIndexSchema)
+          .option("basePath", base).parquet(paths: _*)
+          .select("first_letter", "term", "doc_id", "tf")
       }
       .reduce(_.unionByName(_))
 

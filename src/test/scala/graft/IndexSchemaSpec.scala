@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Indexer, MaterializedIndex}
+import graft.operators.{Indexer, MaterializedIndex, Snapshots}
 
 /** The index layouts' declared schemas ([[Indexer.termIndexSchema]],
   * [[MaterializedIndex.positionalIndexSchema]]) stand in for schema
@@ -56,6 +56,36 @@ class IndexSchemaSpec extends SparkTestBase
     val g1 = MaterializedIndex.refresh(spark, corpus)
     assert(g1.endsWith("_g1"), g1)
     assert(inferred(g1) === Indexer.termIndexSchema)
+  }
+
+  test("snapshot v1 and v2 reads == their inferred-schema reads") {
+    val root = tempDir("graft_schema_snap")
+    Snapshots.commitV1(spark, sf, root)
+    Snapshots.commitUpsertV2(spark, root,
+      graft.sources.Tables.documents(spark, sf).filter(col("doc_id") === 0)
+        .withColumn("text", concat(col("text"), lit(" graftmarker"))))
+    // the read as it was before the schema was declared: inferred per
+    // version directory, first_letter cast back to a string
+    def inferredSnapshot(v: Int) = Snapshots.readManifest(root, v)
+      .groupBy { case (_, dir) => dir }
+      .map { case (dir, letters) =>
+        val base = new java.io.File(root, dir).getAbsolutePath
+        spark.read.option("basePath", base)
+          .parquet(letters.keys.toSeq.sorted.map(l => s"$base/first_letter=$l"): _*)
+          .select(col("first_letter").cast("string").as("first_letter"),
+            col("term"), col("doc_id"), col("tf"))
+      }
+      .reduce(_.unionByName(_))
+    Seq(1, 2).foreach { v =>
+      val got = Snapshots.readSnapshot(spark, root, v)
+      val want = inferredSnapshot(v)
+      assert(got.schema === want.schema, s"v$v")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("term", "doc_id").collect().toSeq
+      val g = rows(got)
+      assert(g.nonEmpty)
+      assert(g === rows(want), s"v$v")
+    }
   }
 
   test("a lookup after an upsert that empties a letter answers correctly") {

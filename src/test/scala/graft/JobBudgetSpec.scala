@@ -14,10 +14,13 @@ import graft.operators.{IndexQueries, Indexer, MaterializedIndex}
   * small served query it costs as much as the scan. Counts are WARM: one
   * call first (index build, codegen, caches), then the jobs of the second
   * call, tagged by a thread-local property so no other activity in the
-  * JVM is counted. Budgets are the current counts; lower is welcome,
-  * exceeding fails. The comment beside each gives the count before the
-  * index reads declared their schema and served results were sorted in
-  * one partition.
+  * JVM is counted. Lower is welcome, exceeding fails. The per-query
+  * ceilings below are the counts before every served plan lost its
+  * exchanges (the comment beside each gives the count before the index
+  * reads declared their schema and served results were sorted in one
+  * partition); the last test pins the current count, ONE job for every
+  * served query: its pruned scan feeds one partition directly, so its
+  * plan holds no exchange and no broadcast.
   */
 class JobBudgetSpec extends SparkTestBase
     with org.scalatest.BeforeAndAfterAll {
@@ -77,5 +80,19 @@ class JobBudgetSpec extends SparkTestBase
       val n = warmJobs(q())
       assert(n <= budget, s"$name ran $n warm jobs, budget $budget")
     }
+  }
+
+  // the queries above plus a 3-word phrase and a 3-term BM25
+  private val servedQueries: Seq[(String, () => DataFrame)] =
+    budgets.map { case (name, _, q) => name -> q } ++ Seq(
+      "MaterializedIndex.servePhrase, 3 words" ->
+        (() => MaterializedIndex.servePhrase(spark, sf, "key order data")),
+      "IndexQueries.bm25TopK, 3 terms" ->
+        (() => IndexQueries.bm25TopK(spark, sf, Seq("scan", "join", "filter"), 10)))
+
+  test("every served index query runs one warm Spark job") {
+    val jobs = servedQueries.map { case (name, q) => name -> warmJobs(q()) }
+    assert(jobs.forall(_._2 <= 1),
+      jobs.map { case (n, j) => s"$n: $j" }.mkString("warm jobs per query: ", ", ", ""))
   }
 }

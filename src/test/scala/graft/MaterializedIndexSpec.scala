@@ -23,6 +23,21 @@ class MaterializedIndexSpec extends SparkTestBase {
     assert(served === scanned)
   }
 
+  test("multi-term AND with a repeated term == without it, served and scanned") {
+    val once = Seq("scan", "join")
+    val twice = Seq("scan", "scan", "join")
+    val served = MaterializedIndex.multiTermAnd(spark, sf, once)
+      .as[(Long, Long)].collect().toSeq
+    assert(served.nonEmpty)
+    assert(MaterializedIndex.multiTermAnd(spark, sf, twice)
+      .as[(Long, Long)].collect().toSeq === served)
+    val scanned = Indexer.multiTermAnd(spark, sf, once)
+      .as[(Long, Long)].collect().toSeq
+    assert(scanned === served)
+    assert(Indexer.multiTermAnd(spark, sf, twice)
+      .as[(Long, Long)].collect().toSeq === scanned)
+  }
+
   test("prefix search: one pruned letter partition, pushed StartsWith, exact") {
     import org.apache.spark.sql.functions._
     val q = MaterializedIndex.prefixSearch(spark, sf, "sc")

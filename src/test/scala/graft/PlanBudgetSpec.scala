@@ -15,7 +15,7 @@ class PlanBudgetSpec extends SparkTestBase {
   private val budgets: Map[String, Int] = Map(
     "q_index_build"     -> 2, // (term,doc) agg + output range sort
     "q_term_lookup"     -> 2, // agg + order
-    "q_index_serve_lookup" -> 1, // pruned scan + order only
+    "q_index_serve_lookup" -> 0, // pruned scan coalesced to one task; sorts there
     "q_exact_dedup"     -> 2, // hash agg + order (window-free keeper path)
     "q_dup_clusters"    -> 1, // serve from materialized labels
     "q_cosine_topk"     -> 2, // broadcast queries; O(k) top-k + order
@@ -38,7 +38,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // groupBy+join-back paid a second full postings shuffle)
     "q_doc_similarity"  -> 8, // weights×3 consumers + dots/norms aggs + window + order
     "q_funnel"          -> 7, // 3 DISJOINT event-subset exchanges (≈ one full pass) + 3 one-row counts + order
-    "q_bm25_topk"       -> 5, // dl agg (partially reused) + stats + tiny dfreq + score agg; query-term postings never shuffle
+    "q_bm25_topk"       -> 0, // one task: pruned query postings (df window) hash-joined to the memoized doc lengths
     "q_tfidf_topk"      -> 3, // ONE postings exchange serves df window + rank window; n_docs + order
     "q_bigram_lm"       -> 2, // pair-count agg + w1-marginal window
     "q_boilerplate"     -> 5, // df agg + threshold broadcast + per-doc aggs + join + order
