@@ -709,9 +709,7 @@ object Dedup {
     * which only Spark implements.
     */
   def simhashSignatures(spark: SparkSession, sfDir: String): DataFrame = {
-    val tok = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explodedTokens(col("text")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    val tok = Indexer.postings(spark, sfDir)
       .withColumn("h", graft.functions.HashFunctions.polyFold64(col("term")))
     val bitSums = (0 until 64).map { i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, col("tf"))

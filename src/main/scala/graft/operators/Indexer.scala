@@ -26,6 +26,14 @@ import graft.sources.Tables
   * — the same shape the reference hand-codes, but spillable, codegen'd and
   * AQE-balanced.
   *
+  * Write side: ONE postings expression ([[postingsOf]]), ONE letter
+  * writer ([[writeLetters]]: the first-letter key, the composite shard
+  * key, the `(term, doc_id)` sort and `partitionBy("first_letter")`) and
+  * ONE upsert merge ([[mergeUpsert]]). The full build, both upserts (in
+  * place here, copy-on-write in [[Snapshots.commitUpsert]]), the refresh
+  * and the positional build all write through them, so no writer can
+  * drift from the layout the readers prune on.
+  *
   * Serving cost: a served lookup ([[lookupInIndex]]) is ONE Spark job.
   * The pruned letter scan feeds one partition directly (a coalesce, no
   * exchange), and that one task sorts the posting list. The result is
@@ -39,16 +47,23 @@ import graft.sources.Tables
   */
 object Indexer {
 
-  /** Postings table (term, doc_id, tf) over the documents corpus.
-    * A1+A2 of SURVEY.md §2: partial+final count per (term, doc).
+  /** Postings (term, doc_id, tf) of a documents relation (doc_id, text):
+    * the one tokenize-to-postings expression. A1+A2 of SURVEY.md §2:
+    * partial+final count per (term, doc). The build, the upserts, the
+    * refresh delta, the streaming postings and SimHash all derive their
+    * postings here.
     */
-  def postings(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
+  def postingsOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), explodedTokens(col("text")).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
-  }
+
+  /** Postings table over the documents corpus. [[IndexRewrite]] registers
+    * this plan as the index's view definition.
+    */
+  def postings(spark: SparkSession, sfDir: String): DataFrame =
+    postingsOf(Tables.documents(spark, sfDir))
 
   /** Full index build, ordered like the reference's `| sort` output
     * (`helper_reduce.c:153`) with the letter partition key (P6).
@@ -66,28 +81,65 @@ object Indexer {
     * English letter frequency — a scale-killer at 100 TB where the write
     * stage is the widest in the job. The composite key gives each letter
     * up to F parallel writer tasks while `partitionBy("first_letter")`
-    * keeps the directory layout (and pruning) identical; within a task,
-    * sorting by term also sorts by first_letter (its leading character),
-    * so the partitioned writer needs no extra sort.
+    * keeps the directory layout (and pruning) identical.
     */
   private[graft] val filesPerLetter = 8
 
-  private[graft] def letterShardKeys: Seq[org.apache.spark.sql.Column] =
+  private def letterShardKeys: Seq[org.apache.spark.sql.Column] =
     Seq(col("first_letter"), pmod(hash(col("term")), lit(filesPerLetter)))
 
-  /** Materialize the master index as letter-partitioned parquet — the
-    * analogue of the 26 `./index/<c>` files (`helper_reduce.c:238-242`),
-    * but idempotent overwrite instead of blind append (SURVEY.md §7.0).
-    * See [[letterShardKeys]] for why the shuffle key is composite: build
-    * parallelism must not be capped at one task per letter.
+  /** The letter writer: lay postings rows (`term`, `doc_id`, then any
+    * data columns) out as the letter-partitioned index at `path` — the
+    * analogue of the 26 `./index/<c>` files (`helper_reduce.c:238-257`),
+    * but an overwrite instead of a blind append (SURVEY.md §7.0) — and
+    * return the letters written. See [[letterShardKeys]] for why the
+    * shuffle key is composite.
+    *
+    * `inPlace` is for a plan that reads `path` itself: the laid-out rows
+    * are materialized first by [[graft.util.Checkpoints.truncate]] (Spark
+    * refuses read+overwrite of one location in one lineage), with their
+    * letters observed on that job, and only those letters are replaced
+    * (dynamic partition overwrite); every other letter keeps its files.
+    * Otherwise the whole directory is replaced.
+    *
+    * Each file is sorted by (term, doc_id). The sort leads with
+    * `first_letter`, which orders rows exactly as `term` does, because
+    * the partitioned writer requires its partition column sorted: a sort
+    * that does not satisfy that is replaced by the writer's own sort on
+    * `first_letter` alone, and the files lose their term order.
     */
-  def writeIndex(spark: SparkSession, sfDir: String, outPath: String): Unit =
-    indexBuild(spark, sfDir)
+  private[graft] def writeLetters(postings: DataFrame, path: String,
+                                  inPlace: Boolean = false): Set[String] = {
+    val laid = postings
+      .select(firstLetter(col("term")).as("first_letter"), col("*"))
       .repartition(letterShardKeys: _*)
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite")
+      .sortWithinPartitions("first_letter", "term", "doc_id")
+    val written = new org.apache.spark.sql.Observation()
+    val rows = if (!inPlace) laid else graft.util.Checkpoints.truncate(
+      postings.sparkSession,
+      laid.observe(written, collect_set(col("first_letter")).as("letters")))
+    rows.write.mode("overwrite")
+      .option("partitionOverwriteMode", if (inPlace) "dynamic" else "static")
       .partitionBy("first_letter")
-      .parquet(outPath)
+      .parquet(path)
+    if (inPlace) written.get("letters").asInstanceOf[scala.collection.Seq[String]].toSet
+    else lettersAt(path)
+  }
+
+  /** The letters an index directory holds, from its `first_letter=`
+    * directories: a listing, not a Spark job. A merge that replaced every
+    * posting of a letter writes no directory for it. Letters are single
+    * characters, so no partition value is escaped.
+    */
+  private[graft] def lettersAt(path: String): Set[String] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith("first_letter="))
+      .map(_.getName.stripPrefix("first_letter="))
+      .toSet
+
+  /** Materialize the master index as letter-partitioned parquet. */
+  def writeIndex(spark: SparkSession, sfDir: String, outPath: String): Unit =
+    writeLetters(postings(spark, sfDir), outPath)
 
   /** The term index layout as [[writeIndex]] (and every upsert or
     * refresh of it) writes it, in the column order a read returns: the
@@ -109,52 +161,46 @@ object Indexer {
                 schema: StructType = termIndexSchema): DataFrame =
     spark.read.schema(schema).parquet(path)
 
+  /** The upsert merge shared by the in-place [[upsertIntoIndex]] and the
+    * copy-on-write [[Snapshots.commitUpsert]]: the postings `old` holds
+    * for every letter the update touches, minus all postings of the
+    * updated documents, plus their new postings — and the set of those
+    * affected letters (any letter holding an updated document's old or
+    * new terms). The letters are collected in one job, so the merge reads
+    * `old` through a literal partition filter. `updatedDocs` holds one
+    * row per doc_id, carrying the document's whole new text (empty text
+    * deletes it): two rows of one doc_id would be tokenized as one
+    * document. `old` is an index read (`first_letter`, `term`, `doc_id`,
+    * `tf`); the merge returns (`term`, `doc_id`, `tf`) for
+    * [[writeLetters]].
+    */
+  private[graft] def mergeUpsert(old: DataFrame,
+                                 updatedDocs: DataFrame): (DataFrame, Set[String]) = {
+    val fresh = postingsOf(updatedDocs)
+    val docIds = updatedDocs.select("doc_id")
+    val affected = fresh.select(firstLetter(col("term")))
+      .union(old.join(docIds, "doc_id").select("first_letter"))
+      .distinct().collect().map(_.getString(0)).toSet
+    val merged = old
+      .filter(col("first_letter").isin(affected.toSeq: _*))
+      .join(docIds, Seq("doc_id"), "left_anti")
+      .select("term", "doc_id", "tf")
+      .unionByName(fresh)
+    (merged, affected)
+  }
+
   /** Incrementally re-index a set of documents into a materialized index:
     * replaces the reference's append-only re-index (which duplicates
     * postings — `helper_reduce.c:241` `a+` mode, SURVEY.md §7.0) with a
-    * partition-targeted upsert. Only letter partitions containing the
-    * updated docs' old or new terms are rewritten (dynamic partition
-    * overwrite); untouched letters keep their files byte-for-byte.
-    *
-    * [[graft.util.Checkpoints.truncate]] materializes the merged result
-    * before the write so the plan no longer scans the path it is about
-    * to overwrite (Spark refuses read+overwrite of the same location in
-    * one lineage) — executor-local blocks by default, RELIABLE
-    * checkpoint when `spark.graft.checkpointDir` points at cluster
-    * storage.
+    * partition-targeted upsert of [[mergeUpsert]]'s merge. Only the
+    * affected letters are rewritten, in place ([[writeLetters]]);
+    * untouched letters keep their files byte-for-byte. `updatedDocs`
+    * holds one row per doc_id (see [[mergeUpsert]]).
     */
   def upsertIntoIndex(spark: SparkSession, indexPath: String,
                       updatedDocs: DataFrame): Unit = {
-    val newPostings = updatedDocs
-      .select(col("doc_id"), explodedTokens(col("text")).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("first_letter", firstLetter(col("term")))
-      .select("first_letter", "term", "doc_id", "tf")
-    val docIds = updatedDocs.select("doc_id").distinct()
-    val old = readIndex(spark, indexPath)
-      .select("first_letter", "term", "doc_id", "tf")
-    val affectedLetters = newPostings.select("first_letter")
-      .union(old.join(docIds, "doc_id").select("first_letter"))
-      .distinct()
-    val kept = old
-      .join(affectedLetters, Seq("first_letter"), "left_semi")
-      .join(docIds, Seq("doc_id"), "left_anti")
-      .select("first_letter", "term", "doc_id", "tf")
-    val merged = graft.util.Checkpoints.truncate(spark,
-      kept.union(newPostings)
-        .repartition(letterShardKeys: _*)
-        .sortWithinPartitions("term", "doc_id"))
-    // materialize BEFORE the overwrite — both derive from a scan of
-    // indexPath, which is about to be rewritten under this lineage
-    val affected = affectedLetters.collect().map(_.getString(0)).toSet
-    val remaining = merged.select("first_letter").distinct()
-      .collect().map(_.getString(0)).toSet
-    merged.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("first_letter")
-      .parquet(indexPath)
+    val (merged, affected) = mergeUpsert(readIndex(spark, indexPath), updatedDocs)
+    val written = writeLetters(merged, indexPath, inPlace = true)
     // dynamic overwrite only rewrites partitions PRESENT in the output: an
     // affected letter whose postings all belonged to the updated docs ends
     // up with zero rows and would keep its stale files — drop those dirs.
@@ -164,7 +210,7 @@ object Indexer {
     // leave the stale partitions in place
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (affected -- remaining).foreach { letter =>
+    (affected -- written).foreach { letter =>
       fs.delete(new org.apache.hadoop.fs.Path(root,
         s"first_letter=$letter"), true)
     }

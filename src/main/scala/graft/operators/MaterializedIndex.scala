@@ -118,8 +118,6 @@ object MaterializedIndex {
     * corpus nightly and tokenizing the day's new documents.
     */
   def refresh(spark: SparkSession, sfDir: String): String = {
-    import graft.functions.TextFunctions.{explodedTokens, firstLetter}
-    import org.apache.spark.sql.functions._
     val base = ensure(spark, sfDir)
     val cur = gens.getOrElseUpdate(base,
       IdxGen(base, baseSigAt(base).getOrElse(
@@ -133,20 +131,12 @@ object MaterializedIndex {
         Indexer.writeIndex(spark, sfDir, nextPath)
       case Some(files) =>
         lastDeltaFiles.set(files)
-        val delta = spark.read.parquet(files: _*)
-          .select(col("doc_id"), explodedTokens(col("text")).as("term"))
-          .groupBy(col("term"), col("doc_id"))
-          .agg(count(lit(1)).as("tf"))
-          .withColumn("first_letter", firstLetter(col("term")))
-          .select("first_letter", "term", "doc_id", "tf")
-        Indexer.readIndex(spark, cur.dataPath)
-          .select("first_letter", "term", "doc_id", "tf")
-          .unionByName(delta)
-          .groupBy("first_letter", "term", "doc_id")
-          .agg(sum("tf").as("tf"))
-          .repartition(Indexer.letterShardKeys: _*)
-          .sortWithinPartitions("term", "doc_id")
-          .write.mode("overwrite").partitionBy("first_letter").parquet(nextPath)
+        Indexer.writeLetters(
+          Indexer.readIndex(spark, cur.dataPath).select("term", "doc_id", "tf")
+            .unionByName(Indexer.postingsOf(spark.read.parquet(files: _*)))
+            .groupBy("term", "doc_id")
+            .agg(sum("tf").as("tf")),
+          nextPath)
     }
     writeBaseSig(nextPath, curSig)
     gens.put(base, IdxGen(nextPath, curSig, cur.gen + 1))
@@ -237,18 +227,15 @@ object MaterializedIndex {
     val path = graft.util.Scratch.dir(spark,
       "graft_posindex_" + graft.util.Scratch.valueToken(sfDir))
     posBuilt.getOrElseUpdate(path, {
-      graft.sources.Tables.documents(spark, sfDir)
-        .select(col("doc_id"),
-          posexplode(graft.functions.TextFunctions.tokens(col("text"))))
-        .toDF("doc_id", "pos", "term")
-        .groupBy(col("term"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .withColumn("first_letter",
-          graft.functions.TextFunctions.firstLetter(col("term")))
-        .repartition(Indexer.letterShardKeys: _*)
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").partitionBy("first_letter").parquet(path)
+      Indexer.writeLetters(
+        graft.sources.Tables.documents(spark, sfDir)
+          .select(col("doc_id"),
+            posexplode(graft.functions.TextFunctions.tokens(col("text"))))
+          .toDF("doc_id", "pos", "term")
+          .groupBy(col("term"), col("doc_id"))
+          .agg(count(lit(1)).as("tf"),
+            sort_array(collect_list(col("pos"))).as("positions")),
+        path)
       path
     })
   }

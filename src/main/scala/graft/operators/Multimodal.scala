@@ -286,23 +286,14 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Partition-wise thumbnail generation over the image assets. Genuine
-    * PNG payloads (content sniff, as everywhere in this module) take the
-    * REAL decode → resample → re-encode path; the synthesized text-byte
-    * assets keep the deterministic byte-sampling stand-in the oracle
-    * reproduces. A PNG that fails its codec quarantines the row (empty
-    * thumb) rather than failing the job — same discipline as
+  /** Partition-wise thumbnail generation over any asset relation (test
+    * frames with genuine PNG payloads, a binaryFile read in production).
+    * Genuine PNG payloads (content sniff, as everywhere in this module)
+    * take the REAL decode → resample → re-encode path; the synthesized
+    * text-byte assets keep the deterministic byte-sampling stand-in the
+    * oracle reproduces. A PNG that fails its codec quarantines the row
+    * (empty thumb) rather than failing the job — same discipline as
     * [[extractFeaturesFrom]].
-    */
-  def resizeImages(spark: SparkSession, sfDir: String,
-                   targetW: Int, targetH: Int): Dataset[Thumb] =
-    resizeImagesFrom(spark, {
-      import spark.implicits._
-      assets(spark, sfDir).filter(col("kind") === "image").as[Asset]
-    }, targetW, targetH)
-
-  /** The same thumbnail pipeline over any asset relation (test frames
-    * with genuine PNG payloads, a binaryFile read in production).
     */
   def resizeImagesFrom(spark: SparkSession, in: Dataset[Asset],
                        targetW: Int, targetH: Int): Dataset[Thumb] = {

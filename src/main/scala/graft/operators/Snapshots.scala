@@ -70,20 +70,10 @@ object Snapshots {
 
   /** Snapshot v1: the full index build, every letter owned by `v1/`. */
   private[graft] def commitV1(spark: SparkSession, sfDir: String, root: String): Unit = {
-    Indexer.writeIndex(spark, sfDir, new File(root, "v1").getAbsolutePath)
-    val letters = Indexer.readIndex(spark, new File(root, "v1").getAbsolutePath)
-      .select(col("first_letter")).distinct()
-      .collect().map(_.getString(0)) // ≤ 26 rows — this IS the metadata
-    writeManifest(root, 1, letters.map(_ -> "v1").toMap)
+    val v1 = new File(root, "v1").getAbsolutePath
+    Indexer.writeIndex(spark, sfDir, v1)
+    writeManifest(root, 1, Indexer.lettersAt(v1).map(_ -> "v1").toMap)
   }
-
-  // per-(corpus, listing-signature) letter list of the shared v1 build
-  // (≤ 26 entries): keying on sfDir alone would serve a STALE manifest
-  // after a mid-JVM corpus mutation — MaterializedIndex.ensure rebuilds,
-  // but a letter missing from the rebuilt artifact would make
-  // readSnapshot fail on a nonexistent partition path, and a newly
-  // appearing letter would silently drop out of the snapshot
-  private val v1Letters = scala.collection.concurrent.TrieMap[String, Manifest]()
 
   /** Snapshot v1 WITHOUT re-running the index build: version directories
     * are immutable by this design's own contract, so every snapshot root
@@ -98,12 +88,7 @@ object Snapshots {
   private def linkSharedV1(spark: SparkSession, sfDir: String, root: String): Unit = {
     val data = MaterializedIndex.ensure(spark, sfDir)
     Files.createSymbolicLink(Paths.get(root, "v1"), Paths.get(data))
-    val sig = graft.sources.Tables.listingSig(Tables.documents(spark, sfDir))
-    val letters = v1Letters.getOrElseUpdate(s"$sfDir|$sig",
-      Indexer.readIndex(spark, data)
-        .select(col("first_letter")).distinct()
-        .collect().map(_.getString(0)).map(_ -> "v1").toMap)
-    writeManifest(root, 1, letters)
+    writeManifest(root, 1, Indexer.lettersAt(data).map(_ -> "v1").toMap)
   }
 
   /** Snapshot v2: copy-on-write upsert of [[commitV1]]'s snapshot. */
@@ -111,52 +96,23 @@ object Snapshots {
                                     updatedDocs: DataFrame): Unit =
     commitUpsert(spark, root, 1, 2, updatedDocs)
 
-  /** Copy-on-write upsert from snapshot `fromV` to snapshot `toV`.
-    * Affected letters (any letter holding the updated docs' old or new
-    * terms) are merged and written under `v$toV/`; the new manifest points
-    * affected letters at the new version directory and every other letter
-    * at whatever version `fromV`'s manifest already referenced — files are
-    * never touched in place, so every older snapshot stays readable.
+  /** Copy-on-write upsert from snapshot `fromV` to snapshot `toV`:
+    * [[Indexer.mergeUpsert]]'s merge of the affected letters is written
+    * under `v$toV/`; the new manifest points those letters at the new
+    * version directory and every other letter at whatever version
+    * `fromV`'s manifest already referenced — files are never touched in
+    * place, so every older snapshot stays readable. A letter whose
+    * postings all belonged to the updated docs writes no directory and
+    * leaves the manifest (the snapshot simply has no such letter).
     */
   private[graft] def commitUpsert(spark: SparkSession, root: String,
                                   fromV: Int, toV: Int,
                                   updatedDocs: DataFrame): Unit = {
-    val v1 = readSnapshot(spark, root, fromV)
-    val newPostings = updatedDocs
-      .select(col("doc_id"), graft.functions.TextFunctions.explodedTokens(col("text")).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("first_letter", graft.functions.TextFunctions.firstLetter(col("term")))
-      .select("first_letter", "term", "doc_id", "tf")
-    val docIds = updatedDocs.select("doc_id").distinct()
-    val affected = newPostings.select("first_letter")
-      .union(v1.join(docIds, "doc_id").select("first_letter"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val merged = v1
-      .filter(col("first_letter").isin(affected.toSeq: _*))
-      .join(docIds, Seq("doc_id"), "left_anti")
-      .select("first_letter", "term", "doc_id", "tf")
-      .unionByName(newPostings)
-      .repartition(Indexer.letterShardKeys: _*)
-      .sortWithinPartitions("term", "doc_id")
-    merged.write.mode("overwrite")
-      .partitionBy("first_letter")
-      .parquet(new File(root, s"v$toV").getAbsolutePath)
-    val fromManifest = readManifest(root, fromV)
-    // letters whose postings all belonged to the updated docs write no new
-    // files — they leave the manifest entirely (the snapshot simply has no
-    // such letter), mirroring upsertIntoIndex's stale-partition cleanup
-    // list the written letter directories off the filesystem rather than
-    // re-reading with Spark: an all-docs-replaced merge can legally write
-    // ZERO rows, and a parquet read of a dir with no part files throws
-    // (letters are single chars, so no partition-value escaping concerns)
-    val written = Option(new File(root, s"v$toV").listFiles())
-      .getOrElse(Array.empty[File])
-      .filter(f => f.isDirectory && f.getName.startsWith("first_letter="))
-      .map(_.getName.stripPrefix("first_letter="))
-      .toSet
+    val (merged, affected) =
+      Indexer.mergeUpsert(readSnapshot(spark, root, fromV), updatedDocs)
+    val written = Indexer.writeLetters(merged, new File(root, s"v$toV").getAbsolutePath)
     writeManifest(root, toV,
-      (fromManifest -- affected) ++ written.map(_ -> s"v$toV").toMap)
+      (readManifest(root, fromV) -- affected) ++ written.map(_ -> s"v$toV"))
   }
 
   /** Expire snapshots: drop the named manifests, then delete every version

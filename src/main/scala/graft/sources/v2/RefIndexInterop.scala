@@ -36,7 +36,8 @@ object RefIndexInterop {
       val dir = Paths.get(path)
       Files.createDirectories(dir)
       graft.operators.Indexer.postings(spark, sfDir)
-        .select(substring(col("term"), 1, 1).as("first_letter"),
+        .select(graft.functions.TextFunctions.firstLetter(col("term"))
+          .as("first_letter"),
           col("term"), col("doc_id"), col("tf"))
         .write
         .format(classOf[RefIndexSource].getName)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Dedup-at-ingest for a continuously arriving corpus — the streaming twin
   * of [[graft.operators.Dedup.exactDedup]]. A training-data feed dedups
@@ -32,17 +31,6 @@ object StreamingDedup {
       .parquet(watchDir)
       .select(col("doc_id"), sha2(col("text"), 256).as("fp"), col("lang"))
       .dropDuplicates("fp")
-
-  /** Run the unbounded dedup stream into an in-memory table (tests/local
-    * smoke). Caller stops the query.
-    */
-  def startToMemory(spark: SparkSession, watchDir: String,
-                    tableName: String): StreamingQuery =
-    dedupStream(spark, watchDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(tableName)
-      .start()
 
   private val drainScratch = new graft.util.ScratchSlot
 

@@ -15,30 +15,17 @@ import graft.functions.TextFunctions._
   */
 object StreamingIndexer {
 
-  /** Streaming postings aggregation over a watched parquet directory of
-    * documents(doc_id, text, ...). Complete-mode output mirrors the
-    * batch [[graft.operators.Indexer.postings]] exactly.
-    */
-  def postingsStream(spark: SparkSession, watchDir: String): DataFrame = {
-    val schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-    spark.readStream
-      .schema(schema)
-      .parquet(watchDir)
-      .select(col("doc_id"), explodedTokens(col("text")).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-  }
+  private val DocSchema =
+    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
-  /** Run the streaming postings build into an in-memory table (for tests /
-    * local smoke). Caller stops the query.
+  /** Streaming postings aggregation over a watched parquet directory of
+    * documents(doc_id, text, ...): [[graft.operators.Indexer.postingsOf]]
+    * over the stream, so complete-mode output mirrors the batch
+    * [[graft.operators.Indexer.postings]] exactly.
     */
-  def startToMemory(spark: SparkSession, watchDir: String,
-                    tableName: String): StreamingQuery =
-    postingsStream(spark, watchDir).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(tableName)
-      .start()
+  def postingsStream(spark: SparkSession, watchDir: String): DataFrame =
+    graft.operators.Indexer.postingsOf(
+      spark.readStream.schema(DocSchema).parquet(watchDir))
 
   private val indexScratch = new graft.util.ScratchSlot
   private val hourlyScratch = new graft.util.ScratchSlot
@@ -239,7 +226,7 @@ object StreamingIndexer {
   def indexAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
     drainToTable(spark, sfDir, "documents.parquet",
       indexScratch)((ss, watch) => postingsStream(ss, watch))
-      .select(substring(col("term"), 1, 1).as("first_letter"),
+      .select(firstLetter(col("term")).as("first_letter"),
         col("term"), col("doc_id"), col("tf"))
       .orderBy("term", "doc_id")
 
@@ -323,7 +310,7 @@ object StreamingIndexer {
       () => { acc.set(null); () },
       () => graft.util.Scratch.deleteRecursively(root))
     val out = acc.get()
-      .select(substring(col("term"), 1, 1).as("first_letter"),
+      .select(firstLetter(col("term")).as("first_letter"),
         col("term"), col("doc_id"), col("tf"))
       .orderBy("term", "doc_id")
     (out, run2Rows)
@@ -405,31 +392,6 @@ object StreamingIndexer {
       .parquet(watchDir))
   }
 
-  /** Run the streaming hourly rollup into memory (complete mode for test
-    * determinism). Caller stops the query.
-    */
-  def startHourlyToMemory(spark: SparkSession, watchDir: String,
-                          tableName: String): StreamingQuery =
-    hourlyRollupStream(spark, watchDir).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(tableName)
-      .start()
-
-  /** Append-mode variant of [[startHourlyToMemory]]: a window's row is
-    * emitted exactly once, when the watermark passes its end — the mode
-    * where the 2-hour watermark actually DROPS late data (complete mode
-    * re-emits everything and never discards). Used to spec the late-data
-    * contract.
-    */
-  def startHourlyAppendToMemory(spark: SparkSession, watchDir: String,
-                                tableName: String): StreamingQuery =
-    hourlyRollupStream(spark, watchDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(tableName)
-      .start()
-
   /** CONTINUOUS INDEX MAINTENANCE: every micro-batch of arriving
     * documents is upserted into the materialized letter-partitioned index
     * via the same partition-targeted overwrite the batch path uses
@@ -442,12 +404,19 @@ object StreamingIndexer {
     * `foreachBatch` is the right sink here (not a streaming aggregation):
     * the upsert is an idempotent-per-batch table REWRITE with its own
     * dynamic-partition-overwrite transaction, not an append of rows.
+    *
+    * One file per micro-batch (`maxFilesPerTrigger` 1): an upsert takes
+    * one row per doc_id, and a file that rewrites a document again must
+    * not share a micro-batch with the earlier version, or the two texts
+    * would be tokenized as one document. The source delivers files in
+    * modification-time order, so the later version wins. The trade: a
+    * backlog of n files costs n upserts instead of one.
     */
   def startIndexMaintenance(spark: SparkSession, watchDir: String,
-                            indexPath: String): StreamingQuery = {
-    val schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+                            indexPath: String): StreamingQuery =
     spark.readStream
-      .schema(schema)
+      .schema(DocSchema)
+      .option("maxFilesPerTrigger", 1)
       .parquet(watchDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -455,5 +424,4 @@ object StreamingIndexer {
           graft.operators.Indexer.upsertIntoIndex(spark, indexPath, batch)
       }
       .start()
-  }
 }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming sessionization — the continuous twin of
   * [[graft.operators.Events.sessionize]] (30-minute inactivity gap), via
@@ -192,15 +192,4 @@ object StreamingSessionize {
         "n_events", "duration_s")
       .orderBy("user_id", "session_no")
   }
-
-  /** Run the streaming sessionization into an in-memory table (append
-    * mode). Caller stops the query.
-    */
-  def startToMemory(spark: SparkSession, watchDir: String,
-                    tableName: String): StreamingQuery =
-    sessionStream(spark, watchDir).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(tableName)
-      .start()
 }

@@ -58,4 +58,36 @@ class IndexUpsertSpec extends SparkTestBase
     assert(new java.io.File(s"$indexDir/first_letter=d").exists())
     assert(!got.exists { case (t, d, _) => d == 3L && t == "cherry" })
   }
+
+  test("in-place upsert and copy-on-write commit agree with a rebuild") {
+    val corpusDir = tempDir("graft_up_eq_corpus")
+    writeCorpus(corpusDir, Seq(1L -> "apple avocado apple", 2L -> "banana berry",
+      3L -> "cherry cherry", 4L -> "kiwi kale"))
+    // a rewrite, a new doc, and a tombstone that empties letter k
+    val updates = Seq(1L -> "apple date", 5L -> "elder fig", 4L -> "")
+      .toDF("doc_id", "text")
+    val indexDir = tempDir("graft_up_eq_index") + "/idx"
+    Indexer.writeIndex(spark, corpusDir, indexDir)
+    Indexer.upsertIntoIndex(spark, indexDir, updates)
+    val root = tempDir("graft_up_eq_snap")
+    graft.operators.Snapshots.commitV1(spark, corpusDir, root)
+    graft.operators.Snapshots.commitUpsert(spark, root, 1, 2, updates)
+
+    val amendedDir = tempDir("graft_up_eq_amended")
+    writeCorpus(amendedDir, Seq(1L -> "apple date", 2L -> "banana berry",
+      3L -> "cherry cherry", 4L -> "", 5L -> "elder fig"))
+    val rebuiltDir = tempDir("graft_up_eq_rebuilt") + "/idx"
+    Indexer.writeIndex(spark, amendedDir, rebuiltDir)
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("first_letter", "term", "doc_id", "tf")
+        .as[(String, String, Long, Long)].collect().toSet
+    val rebuilt = rows(Indexer.readIndex(spark, rebuiltDir))
+    assert(rows(Indexer.readIndex(spark, indexDir)) === rebuilt)
+    assert(rows(graft.operators.Snapshots.readSnapshot(spark, root, 2)) === rebuilt)
+    val letters = Indexer.lettersAt(rebuiltDir)
+    assert(!letters.contains("k"))
+    assert(Indexer.lettersAt(indexDir) === letters)
+    assert(graft.operators.Snapshots.readManifest(root, 2).keySet === letters)
+  }
 }

@@ -210,7 +210,9 @@ class MultimodalStreamingSpec extends SparkTestBase {
   }
 
   test("multimodal resize: exact thumbnail size, deterministic bytes") {
-    val thumbs = Multimodal.resizeImages(spark, sf, 8, 8).collect()
+    val thumbs = Multimodal.resizeImagesFrom(spark,
+      Multimodal.assets(spark, sf).filter("kind = 'image'").as[Multimodal.Asset],
+      8, 8).collect()
     assert(thumbs.nonEmpty)
     thumbs.foreach { t =>
       assert(t.thumb.length === 64)
@@ -307,7 +309,8 @@ class MultimodalStreamingSpec extends SparkTestBase {
     val watch = java.nio.file.Files.createTempDirectory("graft_stream_ev").toString
     graft.sources.Tables.events(spark, sf)
       .write.mode("overwrite").parquet(watch)
-    val q = StreamingIndexer.startHourlyToMemory(spark, watch, "stream_hourly")
+    val q = startToMemory(
+      StreamingIndexer.hourlyRollupStream(spark, watch), "complete", "stream_hourly")
     try {
       q.processAllAvailable()
       val streamed = spark.table("stream_hourly")
@@ -326,7 +329,8 @@ class MultimodalStreamingSpec extends SparkTestBase {
     val watch = java.nio.file.Files.createTempDirectory("graft_stream").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .write.mode("overwrite").parquet(watch)
-    val q = StreamingIndexer.startToMemory(spark, watch, "stream_postings")
+    val q = startToMemory(
+      StreamingIndexer.postingsStream(spark, watch), "complete", "stream_postings")
     try {
       q.processAllAvailable()
       val streamed = spark.table("stream_postings")

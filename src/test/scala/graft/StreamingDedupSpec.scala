@@ -23,7 +23,7 @@ class StreamingDedupSpec extends SparkTestBase {
 
     val nDistinct = docs.select(sha2(col("text"), 256)).distinct().count()
 
-    val q = StreamingDedup.startToMemory(spark, watch, "stream_dedup")
+    val q = startToMemory(StreamingDedup.dedupStream(spark, watch), "append", "stream_dedup")
     try {
       q.processAllAvailable()
       assert(spark.table("stream_dedup").count() === nDistinct)

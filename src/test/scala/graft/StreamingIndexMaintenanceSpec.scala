@@ -50,6 +50,38 @@ class StreamingIndexMaintenanceSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("two versions of a doc landed before the start: the later one wins") {
+    val root = java.nio.file.Files.createTempDirectory("graft_idx_versions")
+    val corpus = Seq((1L, "apple banana"), (2L, "cherry quokka"))
+    corpus.toDF("doc_id", "text").write.parquet(s"$root/corpus/documents.parquet")
+    val idx = s"$root/index"
+    Indexer.writeIndex(spark, s"$root/corpus", idx)
+    val watch = s"$root/watch"
+    def land(text: String): Unit =
+      Seq((9999L, text, "en", "srcX", text.length.toLong))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.mode("append").parquet(watch)
+    land("quokka zebra corpus")
+    // the first version is a minute older, so the source orders it first
+    new java.io.File(watch).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => f.setLastModified(f.lastModified - 60000))
+    land("quokka only now")
+
+    val q = StreamingIndexer.startIndexMaintenance(spark, watch, idx)
+    try {
+      q.processAllAvailable()
+      val served = Indexer.readIndex(spark, idx)
+        .select("term", "doc_id", "tf").as[(String, Long, Long)].collect().toSet
+      val expected = Indexer.postingsOf(
+        (corpus :+ (9999L -> "quokka only now")).toDF("doc_id", "text"))
+        .as[(String, Long, Long)].collect().toSet
+      assert(served === expected)
+    } finally {
+      q.stop()
+      graft.util.Scratch.deleteRecursively(root.toString)
+    }
+  }
+
   test("checkpoint resume: run 2 reads ONLY the delta file, output converges") {
     val (out, run2Rows) =
       graft.streaming.StreamingIndexer.indexResumeWithStats(spark, sf)

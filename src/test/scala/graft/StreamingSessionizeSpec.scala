@@ -12,7 +12,8 @@ class StreamingSessionizeSpec extends SparkTestBase {
     val ev = graft.sources.Tables.events(spark, sf)
     ev.write.mode("overwrite").parquet(watch)
 
-    val q = StreamingSessionize.startToMemory(spark, watch, "stream_sessions")
+    val q = startToMemory(
+      StreamingSessionize.sessionStream(spark, watch), "append", "stream_sessions")
     try {
       q.processAllAvailable()
       // flush: two sentinel files far past every real session's deadline —

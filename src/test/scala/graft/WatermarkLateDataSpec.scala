@@ -29,7 +29,8 @@ class WatermarkLateDataSpec extends SparkTestBase {
     write(watch, ev(1, "2026-01-01 10:05", 1), ev(2, "2026-01-01 10:15", 2),
       ev(3, "2026-01-01 10:45", 1))
 
-    val q = StreamingIndexer.startHourlyAppendToMemory(spark, watch, "late_rollup")
+    val q = startToMemory(
+      StreamingIndexer.hourlyRollupStream(spark, watch), "append", "late_rollup")
     try {
       q.processAllAvailable()
       // batch 2: 13:30 event → after this batch the watermark is 11:30
