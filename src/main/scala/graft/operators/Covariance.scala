@@ -275,25 +275,17 @@ object Covariance {
       .orderBy("dim")
   }
 
-  /** Top principal component by power iteration. The covariance grid is
-    * d(d+1)/2 rows — metadata-sized for any real embedding width — so
-    * collecting it and iterating on the driver is the standard shape
-    * (one distributed pass for the moments, O(d²) driver flops per
-    * iteration, no further cluster work). Deterministic: fixed start
-    * vector, fixed iteration count. Returns (unit eigenvector with a
-    * sign convention — largest-|component| entry positive — and its
-    * eigenvalue).
+  /** Top principal component by power iteration over the collected
+    * covariance grid. The grid is d(d+1)/2 rows — metadata-sized for any
+    * real embedding width — so collecting it and iterating on the driver
+    * is the standard shape (one distributed pass for the moments, O(d²)
+    * driver flops per iteration, no further cluster work). Deterministic:
+    * fixed start vector, fixed iteration count. Returns the unit
+    * eigenvector with a sign convention (largest-|component| entry
+    * positive), its eigenvalue and the dense matrix.
     */
-  def pcaTopComponent(spark: SparkSession, sfDir: String,
-                      iters: Int = 2000): (Array[Double], Double) = {
-    val (v, lambda, _) = eigenFromGrid(
-      covarianceGrid(spark, sfDir).select("dim_i", "dim_j", "cov").collect(),
-      iters)
-    (v, lambda)
-  }
-
-  private def eigenFromGrid(rows: Array[org.apache.spark.sql.Row],
-                            iters: Int): (Array[Double], Double, Array[Array[Double]]) = {
+  private[graft] def eigenFromGrid(rows: Array[org.apache.spark.sql.Row],
+                                   iters: Int): (Array[Double], Double, Array[Array[Double]]) = {
     val d = rows.map(_.getInt(0)).max + 1
     val a = Array.ofDim[Double](d, d)
     rows.foreach { r =>

@@ -163,8 +163,8 @@ object IndexQueries {
     .add("doc_id", LongType).add("dl", LongType)
 
   /** (avgdl, n_docs) per document-length memo path, computed once per
-    * generation — the path embeds the index's `_base_sig`, so a rebuilt
-    * index lands on a fresh key.
+    * generation — the path embeds the index generation's signature, so a
+    * rebuilt index lands on a fresh key.
     */
   private val docLengthStats =
     scala.collection.concurrent.TrieMap[String, (Double, Long)]()
@@ -173,7 +173,7 @@ object IndexQueries {
     * corpus scalars BM25 normalizes by: the memo path of (doc_id, dl),
     * avgdl and n_docs. They are per-corpus constants, so they are
     * aggregated once per index generation (keyed on the index path plus
-    * its `_base_sig`) and reused by every query after it, the
+    * its build-time signature) and reused by every query after it, the
     * incremental reuse across interactive queries of *Incremental Based
     * Framework for Efficient Top-K Similarity Search in Interactive Data
     * Analysis Sessions* (EDBT 2020). The memo lives under the scratch
@@ -182,12 +182,10 @@ object IndexQueries {
     */
   private[graft] def docLengths(spark: SparkSession,
                                 sfDir: String): (String, Double, Long) = {
-    val index = MaterializedIndex.ensure(spark, sfDir)
-    val sig = MaterializedIndex.baseSigAt(index).getOrElse(
-      throw new IllegalStateException(s"index at $index has no signature"))
+    val index = MaterializedIndex.generation(spark, sfDir)
     val path = graft.util.Scratch.memoizedDir(spark,
-      "graft_doclen_" + graft.util.Scratch.valueToken(index), sig) { out =>
-      Indexer.readIndex(spark, index)
+      "graft_doclen_" + graft.util.Scratch.valueToken(index.path), index.sig) { out =>
+      Indexer.readIndex(spark, index.path)
         .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
         .write.mode("overwrite").parquet(out)
     }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.explodedTokens
 import graft.plans.AggRewriteRule
 import graft.sources.Tables
+import graft.util.Generations
 
 /** INDEX-AWARE QUERY REWRITE — the inverted index registered as a
   * materialized view of the raw corpus: a token-level aggregate written
@@ -33,17 +34,13 @@ object IndexRewrite {
   private val registered = scala.collection.concurrent.TrieMap[String, Boolean]()
 
   /** Register (idempotently per JVM per index path) and return the index
-    * path. The base signature comes from the `_base_sig` sidecar the
-    * BUILD persisted beside the index ([[MaterializedIndex.baseSigAt]]) —
-    * a corpus mutated between build and registration therefore vetoes
-    * (asserted in IndexRewriteSpec), exactly like [[RollupView.ensure]]'s
-    * generation-carried signature.
+    * path. The base signature is the one the BUILD took, carried in the
+    * index's generation record ([[MaterializedIndex.generation]]) — a
+    * corpus mutated between build and registration therefore vetoes
+    * (asserted in IndexRewriteSpec), exactly like [[RollupView.ensure]].
     */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val path = MaterializedIndex.ensure(spark, sfDir)
-    registered.getOrElseUpdate(path, { register(spark, sfDir, path); true })
-    path
-  }
+  def ensure(spark: SparkSession, sfDir: String): String =
+    registerOnce(spark, sfDir, MaterializedIndex.generation(spark, sfDir)).path
 
   /** Refresh the index incrementally ([[MaterializedIndex.refresh]] —
     * delta files only when the corpus merely grew) and re-register: the
@@ -51,13 +48,17 @@ object IndexRewrite {
     * `doc_postings` family), so the staleness veto lifts and queries
     * serve from the refreshed postings.
     */
-  def ensureRefreshed(spark: SparkSession, sfDir: String): String = {
-    val path = MaterializedIndex.refresh(spark, sfDir)
-    registered.getOrElseUpdate(path, { register(spark, sfDir, path); true })
-    path
+  def ensureRefreshed(spark: SparkSession, sfDir: String): Generations.Gen =
+    registerOnce(spark, sfDir, MaterializedIndex.refresh(spark, sfDir))
+
+  private def registerOnce(spark: SparkSession, sfDir: String,
+                           g: Generations.Gen): Generations.Gen = {
+    registered.getOrElseUpdate(g.path, { register(spark, sfDir, g); true })
+    g
   }
 
-  private def register(spark: SparkSession, sfDir: String, path: String): Unit = {
+  private def register(spark: SparkSession, sfDir: String,
+                       g: Generations.Gen): Unit = {
     val analyzed = Indexer.postings(spark, sfDir).queryExecution.analyzed
     val agg = analyzed.collectFirst { case ag: Aggregate => ag }.get
     val d = AggRewriteRule.destructure(agg).getOrElse(
@@ -72,14 +73,12 @@ object IndexRewrite {
     val cnt = d.a.flatMap(_.collect {
       case ae: AggregateExpression => ae.aggregateFunction
     }).head
-    val mvPlan = Indexer.readIndex(spark, path).queryExecution.analyzed
+    val mvPlan = Indexer.readIndex(spark, g.path).queryExecution.analyzed
     AggRewriteRule.register(spark, baseKey, AggRewriteRule.MvSpec(
       mvPlan = mvPlan,
       keys = Seq(("doc_id", docKey, (a: Attribute) => a)),
       aggs = Seq((cnt, "tf", (a: Attribute) => Sum(a))),
-      baseSig = MaterializedIndex.baseSigAt(path).getOrElse(
-        throw new IllegalStateException(
-          s"index at $path has no build-time base signature")),
+      baseSig = g.sig,
       gen = Some((genExpr, "term")),
       family = "doc_postings"))
     // compose with layout-aware pruning: the rewrite leaves its Filter
@@ -111,30 +110,21 @@ object IndexRewrite {
       .limit(50)
   }
 
-  private val stagedBase = scala.collection.concurrent.TrieMap[String, String]()
-
   /** q_index_refresh: the index-maintenance lifecycle under one
-    * driver-checked oracle — stage a private copy of the corpus, build +
-    * register the postings index, APPEND a deterministic batch (the 300
-    * lowest doc_ids re-inserted), INCREMENTALLY refresh (tokenizes the
-    * delta file only — asserted in spec), and serve a tokenize-and-count
+    * driver-checked oracle — stage a private copy of the corpus, build the
+    * postings index, APPEND a deterministic batch (the 300 lowest doc_ids
+    * re-inserted), INCREMENTALLY refresh (tokenizes the delta file only —
+    * asserted in spec) and register, and serve a tokenize-and-count
     * written against the base from the refreshed generation. The oracle
     * recomputes over base ∪ the same batch, so the hash match proves
     * append-detection, delta tokenization, AND the exact (term, doc)
     * count merge in one row — the postings twin of q_mv_refresh.
     */
   def refreshedServe(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = stagedBase.getOrElseUpdate(sfDir, {
-      val d = graft.util.Scratch.dir(spark,
-        "graft_idx_refresh_base_" + graft.util.Scratch.valueToken(sfDir))
-      val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-      raw.coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-      ensure(spark, d)
-      raw.orderBy("doc_id").limit(300).coalesce(1)
-        .write.mode("append").parquet(s"$d/documents.parquet")
-      ensureRefreshed(spark, d)
-      d
-    })
+    val dir = Generations.staged(spark, "graft_idx_refresh_base_", sfDir,
+      "documents")(MaterializedIndex.ensure(spark, _))(
+      _.orderBy("doc_id").limit(300))
+    ensureRefreshed(spark, dir)
     Tables.documents(spark, dir)
       .select(explodedTokens(col("text")).as("term"))
       .groupBy(col("term"))

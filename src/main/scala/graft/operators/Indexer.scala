@@ -237,10 +237,7 @@ object Indexer {
     // the upsert overwrites letter partitions in place (unlinking the
     // clone's links — the shared files are untouched), and what this
     // query proves is the UPSERT, not the build (q_index_build owns that).
-    // `_base_sig` stays behind: it describes the shared artifact's corpus
-    // state, which the mutated clone no longer reflects.
-    graft.util.Scratch.hardlinkTree(
-      MaterializedIndex.ensure(spark, sfDir), dir, _.endsWith("_base_sig"))
+    graft.util.Scratch.hardlinkTree(MaterializedIndex.ensure(spark, sfDir), dir)
     val updated = Tables.documents(spark, sfDir)
       .filter(col("doc_id") === 0)
       .withColumn("text", concat(col("text"), lit(" graftmarker")))

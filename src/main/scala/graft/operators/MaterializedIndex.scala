@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,7 +15,11 @@ import org.apache.spark.sql.types._
   * once per JVM per corpus dir; the serve queries below then run against
   * that path with Catalyst partition pruning standing in for "open one of
   * the 26 files". At cluster scale the path would be shared storage and the
-  * build a scheduled job; the query plans are identical.
+  * build a scheduled job; the query plans are identical. The term index,
+  * its [[refresh]] and the positional index ([[ensurePositional]]) are
+  * generations of the one lifecycle every incrementally refreshed
+  * artifact shares, [[graft.util.Generations]]: one record per index of
+  * its path, build-time corpus listing, number and delta files.
   *
   * Spark jobs per served query, warm (pinned in JobBudgetSpec): ONE for
   * each of [[termLookup]], [[multiTermAnd]], [[prefixSearch]] and
@@ -40,108 +42,52 @@ import org.apache.spark.sql.types._
   */
 object MaterializedIndex {
 
-  private val built = scala.collection.concurrent.TrieMap[String, String]()
+  private def indexName(sfDir: String) =
+    "graft_index_" + graft.util.Scratch.valueToken(sfDir)
 
-  /** Path of the materialized index for `sfDir`, building it on first use
-    * in this JVM (subsequent calls are free — build-once/query-many).
+  private def docsSig(spark: SparkSession, sfDir: String) =
+    graft.sources.Tables.listingSig(graft.sources.Tables.documents(spark, sfDir))
+
+  /** The current generation of the materialized index for `sfDir`,
+    * building generation 0 on first use in this JVM (later calls are
+    * free — build-once/query-many). Its signature is the corpus listing
+    * THE BUILD READ, so the rewrite registration guards staleness against
+    * the build-time state, not whatever the corpus looks like when
+    * registration happens.
     */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    // keyed on the resolved scratch path so spark.graft.scratchDir (shared
-    // storage on a real cluster — see [[graft.util.Scratch.root]]) is
-    // honored even when it changes within one JVM
-    val path = graft.util.Scratch.dir(spark,
-      "graft_index_" + graft.util.Scratch.valueToken(sfDir))
-    built.getOrElseUpdate(path, {
-      // capture the corpus listing THE BUILD READS — before the build, off
-      // the same relation — and persist it beside the index: the rewrite
-      // registration must guard staleness against the build-time state,
-      // not whatever the corpus looks like when registration happens
-      val sig = corpusSig(spark, sfDir)
-      Indexer.writeIndex(spark, sfDir, path)
-      writeBaseSig(path, sig)
-      path
-    })
-  }
+  private[graft] def generation(spark: SparkSession,
+                                sfDir: String): graft.util.Generations.Gen =
+    graft.util.Generations.once(spark, indexName(sfDir), docsSig(spark, sfDir))(
+      Indexer.writeIndex(spark, sfDir, _))
 
-  /** The documents base file-listing signature, as
-    * [[graft.plans.AggRewriteRule.fileSig]] computes it at match time.
-    */
-  private def corpusSig(spark: SparkSession, sfDir: String): String =
-    graft.sources.Tables.documents(spark, sfDir).queryExecution.analyzed
-      .collectFirst {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          graft.plans.AggRewriteRule.fileSig(lr)
-      }.flatten.getOrElse(
-        throw new IllegalStateException("documents base has no file listing"))
+  /** Path of the current materialized index for `sfDir` (see [[generation]]). */
+  def ensure(spark: SparkSession, sfDir: String): String =
+    generation(spark, sfDir).path
 
-  // underscore-prefixed sidecar: parquet readers skip _-files, so it can
-  // live inside the index directory and share the index's lifecycle
-  private def sigFile(indexPath: String) =
-    new File(new File(indexPath), "_base_sig")
-
-  private def writeBaseSig(indexPath: String, sig: String): Unit = {
-    java.nio.file.Files.write(sigFile(indexPath).toPath,
-      sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
-  }
-
-  /** The base signature persisted at index build/refresh time — what
-    * [[IndexRewrite.register]] must guard staleness against.
-    */
-  private[graft] def baseSigAt(indexPath: String): Option[String] = {
-    val f = sigFile(indexPath)
-    if (!f.isFile) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private final case class IdxGen(dataPath: String, sig: String, gen: Int)
-  private val gens = scala.collection.concurrent.TrieMap[String, IdxGen]()
-
-  /** Spec observability: the corpus files the last refresh aggregated. */
-  private[graft] val lastDeltaFiles =
-    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-
-  /** INCREMENTAL INDEX REFRESH — the postings twin of
-    * [[RollupView.refresh]]: when the corpus has only GROWN since the
-    * stored generation (pure appends — new files, no file removed or
-    * rewritten), tokenize ONLY the delta files and merge their (term,
-    * doc_id, tf) cells into the stored index — counts sum, so the merged
-    * index is value-identical to a full rebuild — then persist the new
-    * listing signature beside the new generation. The reference's
+  /** INCREMENTAL INDEX REFRESH through [[graft.util.Generations.refresh]]:
+    * when the corpus has only GROWN since the current generation,
+    * tokenize ONLY the delta files and sum their (term, doc_id, tf) cells
+    * into the stored postings in a fresh generation — counts sum, so the
+    * merged index is value-identical to a full rebuild. The reference's
     * append-mode letter files (`helper_reduce.c:255-256`) were always
     * incremental; this recovers that without its duplicate-postings bug
     * (SURVEY.md §7.0): duplicates MERGE (sum) instead of appending twice.
-    * A removed or rewritten corpus file invalidates stored cells, so that
-    * case falls back to a full rebuild — only growth is incremental,
-    * honestly. At 100 TB this is the difference between re-tokenizing the
-    * corpus nightly and tokenizing the day's new documents.
+    * A removed or rewritten corpus file rebuilds. At 100 TB this is the
+    * difference between re-tokenizing the corpus nightly and tokenizing
+    * the day's new documents.
     */
-  def refresh(spark: SparkSession, sfDir: String): String = {
-    val base = ensure(spark, sfDir)
-    val cur = gens.getOrElseUpdate(base,
-      IdxGen(base, baseSigAt(base).getOrElse(
-        throw new IllegalStateException(s"index at $base has no signature")), 0))
-    val curSig = corpusSig(spark, sfDir)
-    if (curSig == cur.sig) return cur.dataPath // already current
-    val nextPath = s"${base}_g${cur.gen + 1}"
-    graft.util.ListingDiff.deltaFiles(cur.sig, curSig) match {
-      case None => // overwrite/compaction: full rebuild
-        lastDeltaFiles.set(Nil)
-        Indexer.writeIndex(spark, sfDir, nextPath)
-      case Some(files) =>
-        lastDeltaFiles.set(files)
+  def refresh(spark: SparkSession, sfDir: String): graft.util.Generations.Gen =
+    graft.util.Generations.refresh(spark, indexName(sfDir),
+      docsSig(spark, sfDir))(Indexer.writeIndex(spark, sfDir, _)) {
+      (cur, files, next) =>
         Indexer.writeLetters(
-          Indexer.readIndex(spark, cur.dataPath).select("term", "doc_id", "tf")
+          Indexer.readIndex(spark, cur.path).select("term", "doc_id", "tf")
             .unionByName(Indexer.postingsOf(spark.read.parquet(files: _*)))
             .groupBy("term", "doc_id")
             .agg(sum("tf").as("tf")),
-          nextPath)
+          next)
+        next
     }
-    writeBaseSig(nextPath, curSig)
-    gens.put(base, IdxGen(nextPath, curSig, cur.gen + 1))
-    nextPath
-  }
 
   /** The postings relation served from the materialized index — the
     * build-once/query-many source for every operator that consumes
@@ -206,8 +152,6 @@ object MaterializedIndex {
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))
       .sortWithinPartitions("term")
 
-  private val posBuilt = scala.collection.concurrent.TrieMap[String, String]()
-
   /** The positional index layout [[ensurePositional]] writes: the term
     * index's columns plus the sorted in-document `positions`, then the
     * `first_letter` partition column (see [[Indexer.termIndexSchema]]).
@@ -223,10 +167,10 @@ object MaterializedIndex {
     * lifecycle; the positions column adds ~tf ints per posting, the
     * standard space/serve trade every search engine makes.
     */
-  def ensurePositional(spark: SparkSession, sfDir: String): String = {
-    val path = graft.util.Scratch.dir(spark,
-      "graft_posindex_" + graft.util.Scratch.valueToken(sfDir))
-    posBuilt.getOrElseUpdate(path, {
+  def ensurePositional(spark: SparkSession, sfDir: String): String =
+    graft.util.Generations.once(spark,
+      "graft_posindex_" + graft.util.Scratch.valueToken(sfDir),
+      docsSig(spark, sfDir)) { path =>
       Indexer.writeLetters(
         graft.sources.Tables.documents(spark, sfDir)
           .select(col("doc_id"),
@@ -236,9 +180,7 @@ object MaterializedIndex {
           .agg(count(lit(1)).as("tf"),
             sort_array(collect_list(col("pos"))).as("positions")),
         path)
-      path
-    })
-  }
+    }.path
 
   /** Phrase search SERVED from the positional index: prune to the
     * phrase's letters, read each word's posting list (one pruned partition

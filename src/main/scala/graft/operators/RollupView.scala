@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal, TruncTimestamp}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.AggRewriteRule
 import graft.sources.Tables
+import graft.util.Generations
 
 /** The hourly events MATERIALIZED VIEW behind [[graft.plans.AggRewriteRule]]:
   * built once into scratch parquet, registered so the optimizer serves
@@ -23,115 +24,80 @@ import graft.sources.Tables
   * Templates are extracted from the analyzed view definition itself, so
   * they are precisely the trees the same analyzer produces for user
   * queries (same eval modes, time zone, cast semantics).
+  *
+  * Both views are generations of [[graft.util.Generations]], the one
+  * lifecycle every incrementally refreshed artifact shares: [[ensure]]
+  * and [[ensureByType]] build generation 0 once per JVM, and [[refresh]]
+  * grows the hourly view by appended base files or rebuilds it. Each
+  * registration carries its generation's build-time base signature.
   */
 object RollupView {
 
-  /** One view generation: its parquet location, the base's file-listing
-    * signature AS OF the generation's build/refresh, and the generation
-    * number. The registration must carry the generation's signature (not
-    * a fresh one), or a base mutated after the build would wrongly
-    * re-validate a stale view on the next ensure().
+  /** The per-cell representation over any events-shaped frame, grouped
+    * by `keys` — shared by both views' builds and the delta refresh. The
+    * stored partial is pinned to decimal(38,2): re-aggregation of
+    * decimals is exact and associative at any width, and 36 integer
+    * digits cannot overflow for any physical cell (a 14,2 store would
+    * silently null — or throw under ANSI — the moment one cell's sum
+    * crossed 12 integer digits, while the staleness guard kept
+    * validating the view).
     */
-  private final case class Gen(dataPath: String, sig: String, gen: Int)
-
-  private val built = scala.collection.concurrent.TrieMap[String, Gen]()
-
-  /** The per-cell representation over any events-shaped frame — shared by
-    * the full build and the delta refresh. The stored partial is pinned to
-    * decimal(38,2): re-aggregation of decimals is exact and associative at
-    * any width, and 36 integer digits cannot overflow for any physical
-    * cell (a 14,2 store would silently null — or throw under ANSI — the
-    * moment one cell's sum crossed 12 integer digits, while the staleness
-    * guard kept validating the view).
-    */
-  private def cellsOf(events: DataFrame): DataFrame =
-    events
-      .groupBy(date_trunc("hour", col("ts")).as("hour_ts"), col("event_type"))
+  private def cellsBy(events: DataFrame, keys: Column*): DataFrame =
+    events.groupBy(keys: _*)
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(14,2)"))
           .cast("decimal(38,2)").as("sum_value"),
         min(col("value")).as("min_value"),
         max(col("value")).as("max_value"))
 
+  private def cellsOf(events: DataFrame): DataFrame =
+    cellsBy(events, date_trunc("hour", col("ts")).as("hour_ts"), col("event_type"))
+
   /** The view definition over the registered base. */
   private def viewDf(spark: SparkSession, sfDir: String): DataFrame =
     cellsOf(Tables.events(spark, sfDir))
 
-  private def rootOf(spark: SparkSession, sfDir: String): String =
-    graft.util.Scratch.dir(spark,
-      "graft_mv_hourly_" + graft.util.Scratch.valueToken(sfDir))
+  private def hourlyName(sfDir: String) =
+    "graft_mv_hourly_" + graft.util.Scratch.valueToken(sfDir)
 
-  /** Build (once per JVM per sf dir) and register the view. */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val root = rootOf(spark, sfDir)
-    val g = built.getOrElseUpdate(root, {
-      val df = viewDf(spark, sfDir)
-      val s = baseSigOf(df)
-      val p = s"$root/g0"
-      df.write.mode("overwrite").parquet(p)
-      Gen(p, s, 0)
-    })
-    register(spark, sfDir, g.dataPath, Some(g.sig))
-    g.dataPath
-  }
-
-  /** Spec observability: the base files the last refresh read. */
-  private[graft] val lastDeltaFiles =
-    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-
-  /** INCREMENTAL REFRESH: when the base has only GROWN since the stored
-    * generation (pure appends — new files, no file removed or rewritten),
-    * aggregate ONLY the delta files and merge their cells into the stored
-    * view (count/decimal-sum/min/max are all exact merges, so the result
-    * is bit-identical to a full rebuild), then re-register under the new
-    * listing — the staleness veto lifts without ever re-reading base
-    * history. At 100 TB this is the whole point of keeping a view: the
-    * daily refresh costs one pass over the day's files, not the table.
-    * A removed or rewritten file invalidates stored cells (their rows may
-    * be gone), so that case falls back to a full rebuild — only growth is
-    * incremental, honestly.
+  /** Build (once per JVM per sf dir) and register the view's current
+    * generation, under the base signature its build took: a base mutated
+    * after the build vetoes the rewrite until a [[refresh]].
     */
-  def refresh(spark: SparkSession, sfDir: String): String = {
-    val root = rootOf(spark, sfDir)
-    ensure(spark, sfDir)
-    val prev = built(root)
-    val df = viewDf(spark, sfDir)
-    val curSig = baseSigOf(df)
-    if (curSig == prev.sig) return prev.dataPath // already current
-    val next = graft.util.ListingDiff.deltaFiles(prev.sig, curSig) match {
-      case None => // overwrite/compaction: full rebuild
-        lastDeltaFiles.set(Nil)
-        val p = s"$root/g${prev.gen + 1}"
-        df.write.mode("overwrite").parquet(p)
-        Gen(p, curSig, prev.gen + 1)
-      case Some(files) =>
-        lastDeltaFiles.set(files)
-        val delta = cellsOf(Tables.normalizeTs(
-          spark.read.parquet(files: _*)))
-        val merged = spark.read.parquet(prev.dataPath)
-          .unionByName(delta)
-          .groupBy("hour_ts", "event_type")
-          .agg(sum("n").as("n"),
-            sum("sum_value").cast("decimal(38,2)").as("sum_value"),
-            min("min_value").as("min_value"),
-            max("max_value").as("max_value"))
-        val p = s"$root/g${prev.gen + 1}"
-        merged.write.mode("overwrite").parquet(p)
-        Gen(p, curSig, prev.gen + 1)
-      }
-    built.put(root, next)
-    register(spark, sfDir, next.dataPath, Some(next.sig))
-    next.dataPath
+  def ensure(spark: SparkSession, sfDir: String): String = {
+    lazy val df = viewDf(spark, sfDir)
+    val g = Generations.once(spark, hourlyName(sfDir), Tables.listingSig(df))(
+      df.write.mode("overwrite").parquet(_))
+    register(spark, sfDir, g.path, Some(g.sig))
+    g.path
   }
 
-  /** The base file-listing signature behind a view definition. */
-  private def baseSigOf(df: DataFrame): String = {
-    val agg = df.queryExecution.analyzed
-      .collectFirst { case ag: Aggregate => ag }.get
-    val d = AggRewriteRule.destructure(agg).getOrElse(
-      throw new IllegalStateException("view definition did not destructure"))
-    AggRewriteRule.fileSig(d.rel).getOrElse(
-      throw new IllegalStateException("view base is not a file-source relation"))
+  /** INCREMENTAL REFRESH through [[Generations.refresh]]: when the base
+    * has only GROWN since the current generation, aggregate ONLY the
+    * delta files and merge their cells into the stored view in a fresh
+    * generation (count/decimal-sum/min/max are all exact merges, so the
+    * result is bit-identical to a full rebuild), then re-register under
+    * the new listing — the staleness veto lifts without ever re-reading
+    * base history. At 100 TB this is the whole point of keeping a view:
+    * the daily refresh costs one pass over the day's files, not the
+    * table. A removed or rewritten file rebuilds.
+    */
+  def refresh(spark: SparkSession, sfDir: String): Generations.Gen = {
+    val df = viewDf(spark, sfDir)
+    val g = Generations.refresh(spark, hourlyName(sfDir), Tables.listingSig(df))(
+      df.write.mode("overwrite").parquet(_)) { (cur, files, next) =>
+      spark.read.parquet(cur.path)
+        .unionByName(cellsOf(Tables.normalizeTs(spark.read.parquet(files: _*))))
+        .groupBy("hour_ts", "event_type")
+        .agg(sum("n").as("n"),
+          sum("sum_value").cast("decimal(38,2)").as("sum_value"),
+          min("min_value").as("min_value"),
+          max("max_value").as("max_value"))
+        .write.mode("overwrite").parquet(next)
+      next
+    }
+    register(spark, sfDir, g.path, Some(g.sig))
+    g
   }
 
   /** Register a parquet relation with the view's schema as THE hourly
@@ -144,45 +110,52 @@ object RollupView {
     register(spark, sfDir, mvPath, None)
 
   private def register(spark: SparkSession, sfDir: String, mvPath: String,
-                       sigAtBuild: Option[String]): Unit = {
-    val analyzed = viewDf(spark, sfDir).queryExecution.analyzed
-    val agg = analyzed.collectFirst { case ag: Aggregate => ag }.get
+                       sigAtBuild: Option[String]): Unit =
+    registerView(spark, viewDf(spark, sfDir), mvPath, sigAtBuild,
+      "events_hourly") { keyExprs =>
+      require(keyExprs.size == 2, s"unexpected view shape: ${keyExprs.size} keys")
+      // time-hierarchy derivations: date_trunc(u, ts) for any unit coarser
+      // than the stored hour composes through the key — the same truncation
+      // applied to hour_ts is bit-identical (hour ⊂ day ⊂ week/month/…)
+      val hourTrunc = keyExprs(0).asInstanceOf[TruncTimestamp]
+      Seq(("hour_ts", keyExprs(0), (a: Attribute) => a: Expression),
+        ("event_type", keyExprs(1), (a: Attribute) => a: Expression)) ++
+        Seq("day", "week", "month", "quarter", "year").map { u =>
+          ("hour_ts", hourTrunc.copy(format = Literal(u)): Expression,
+            (a: Attribute) => hourTrunc.copy(format = Literal(u), timestamp = a)
+              : Expression)
+        }
+    }
+
+  /** Register `mvPath` as the stored cells of `view` (n, sum_value,
+    * min_value, max_value over its keys) in rewrite family `family`;
+    * `keys` maps the view's grouping expressions to the key derivations.
+    * Without a build-time signature the base's current listing is used.
+    */
+  private def registerView(spark: SparkSession, view: DataFrame, mvPath: String,
+                           sig: Option[String], family: String)(
+      keys: Seq[Expression] => Seq[(String, Expression, Attribute => Expression)])
+      : Unit = {
+    val agg = view.queryExecution.analyzed.collectFirst { case ag: Aggregate => ag }.get
     val d = AggRewriteRule.destructure(agg).getOrElse(
-      throw new IllegalStateException("view definition did not destructure"))
+      throw new IllegalStateException(s"$family view did not destructure"))
     val baseKey = AggRewriteRule.rootKey(d.rel).getOrElse(
       throw new IllegalStateException("view base is not a file-source relation"))
-    val keyExprs = d.g.map { case al: Alias => al.child; case e => e }
     val afs = d.a.flatMap(_.collect {
       case ae: AggregateExpression => ae.aggregateFunction
     })
-    require(keyExprs.size == 2 && afs.size == 4,
-      s"unexpected view shape: ${keyExprs.size} keys, ${afs.size} aggs")
-    val mvPlan = spark.read.parquet(mvPath).queryExecution.analyzed
-    // time-hierarchy derivations: date_trunc(u, ts) for any unit coarser
-    // than the stored hour composes through the key — the same truncation
-    // applied to hour_ts is bit-identical (hour ⊂ day ⊂ week/month/…)
-    val hourTrunc = keyExprs(0).asInstanceOf[TruncTimestamp]
-    val coarser: Seq[(String, Expression, Attribute => Expression)] =
-      Seq("day", "week", "month", "quarter", "year").map { u =>
-        ("hour_ts",
-          hourTrunc.copy(format = Literal(u)): Expression,
-          (a: Attribute) => hourTrunc.copy(format = Literal(u), timestamp = a)
-            : Expression)
-      }
-    val idKeys: Seq[(String, Expression, Attribute => Expression)] =
-      Seq(("hour_ts", keyExprs(0), (a: Attribute) => a),
-        ("event_type", keyExprs(1), (a: Attribute) => a))
+    require(afs.size == 4, s"unexpected view shape: ${afs.size} aggs")
     AggRewriteRule.register(spark, baseKey, AggRewriteRule.MvSpec(
-      mvPlan = mvPlan,
-      keys = idKeys ++ coarser,
+      mvPlan = spark.read.parquet(mvPath).queryExecution.analyzed,
+      keys = keys(d.g.map { case al: Alias => al.child; case e => e }),
       aggs = Seq(
         (afs(0), "n", (a: Attribute) => Sum(a)),
         (afs(1), "sum_value", (a: Attribute) => Sum(a)),
         (afs(2), "min_value", (a: Attribute) => Min(a)),
         (afs(3), "max_value", (a: Attribute) => Max(a))),
-      baseSig = sigAtBuild.getOrElse(AggRewriteRule.fileSig(d.rel).getOrElse(
+      baseSig = sig.getOrElse(AggRewriteRule.fileSig(d.rel).getOrElse(
         throw new IllegalStateException("view base has no file listing"))),
-      family = "events_hourly"))
+      family = family))
   }
 
   // ——— the PER-TYPE sibling view: same base, coarser keys ———
@@ -192,52 +165,21 @@ object RollupView {
   // and the optimizer must serve it from this one — 4 cells instead of
   // hours×types. Exercises AggRewriteRule's multi-view selection.
 
-  private val builtByType =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-
   private def byTypeViewDf(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(14,2)"))
-          .cast("decimal(38,2)").as("sum_value"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
+    cellsBy(Tables.events(spark, sfDir), col("event_type"))
 
   /** Build (once per JVM per sf dir) and register the per-type view. The
-    * base signature is captured AT BUILD (the RollupView.Gen discipline):
-    * a base mutated between build and registration must veto, not serve.
+    * base signature is captured AT BUILD, as [[ensure]]'s is: a base
+    * mutated between build and registration must veto, not serve.
     */
   def ensureByType(spark: SparkSession, sfDir: String): String = {
-    val root = graft.util.Scratch.dir(spark,
-      "graft_mv_bytype_" + graft.util.Scratch.valueToken(sfDir))
-    val (path, sig) = builtByType.getOrElseUpdate(root, {
-      val df = byTypeViewDf(spark, sfDir)
-      val s = baseSigOf(df)
-      df.write.mode("overwrite").parquet(s"$root/g0")
-      (s"$root/g0", s)
-    })
-    val analyzed = byTypeViewDf(spark, sfDir).queryExecution.analyzed
-    val agg = analyzed.collectFirst { case ag: Aggregate => ag }.get
-    val d = AggRewriteRule.destructure(agg).getOrElse(
-      throw new IllegalStateException("by-type view did not destructure"))
-    val baseKey = AggRewriteRule.rootKey(d.rel).getOrElse(
-      throw new IllegalStateException("view base is not a file-source relation"))
-    val keyExprs = d.g.map { case al: Alias => al.child; case e => e }
-    val afs = d.a.flatMap(_.collect {
-      case ae: AggregateExpression => ae.aggregateFunction
-    })
-    AggRewriteRule.register(spark, baseKey, AggRewriteRule.MvSpec(
-      mvPlan = spark.read.parquet(path).queryExecution.analyzed,
-      keys = Seq(("event_type", keyExprs.head, (a: Attribute) => a)),
-      aggs = Seq(
-        (afs(0), "n", (a: Attribute) => Sum(a)),
-        (afs(1), "sum_value", (a: Attribute) => Sum(a)),
-        (afs(2), "min_value", (a: Attribute) => Min(a)),
-        (afs(3), "max_value", (a: Attribute) => Max(a))),
-      baseSig = sig,
-      family = "events_bytype"))
-    path
+    val df = byTypeViewDf(spark, sfDir)
+    val g = Generations.once(spark,
+      "graft_mv_bytype_" + graft.util.Scratch.valueToken(sfDir),
+      Tables.listingSig(df))(df.write.mode("overwrite").parquet(_))
+    registerView(spark, df, g.path, Some(g.sig), "events_bytype")(keyExprs =>
+      Seq(("event_type", keyExprs.head, (a: Attribute) => a)))
+    g.path
   }
 
   /** q_mv_hourly: an hour × type aggregate with a key filter, WRITTEN
@@ -299,8 +241,6 @@ object RollupView {
       .orderBy("day", "event_type")
   }
 
-  private val stagedBase = scala.collection.concurrent.TrieMap[String, String]()
-
   /** q_mv_refresh: the full lifecycle under one driver-checked oracle —
     * stage a private copy of the base, build the view, APPEND a
     * deterministic batch (the 500 lowest event_ids re-inserted),
@@ -311,17 +251,9 @@ object RollupView {
     * one row.
     */
   def refreshedServe(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = stagedBase.getOrElseUpdate(sfDir, {
-      val d = graft.util.Scratch.dir(spark,
-        "graft_mv_refresh_base_" + graft.util.Scratch.valueToken(sfDir))
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      raw.coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
-      ensure(spark, d)
-      raw.orderBy("event_id").limit(500).coalesce(1)
-        .write.mode("append").parquet(s"$d/events.parquet")
-      refresh(spark, d)
-      d
-    })
+    val dir = Generations.staged(spark, "graft_mv_refresh_base_", sfDir,
+      "events")(ensure(spark, _))(_.orderBy("event_id").limit(500))
+    refresh(spark, dir)
     Tables.events(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),

@@ -639,107 +639,46 @@ object Similarity {
     * artifact (encode once offline, serve forever from the M-byte
     * codes), so re-encoding the corpus on every query — a full float
     * read plus the per-row subspace argmin math — was paying the build
-    * cost at serve time. [[graft.util.Scratch.memoizedDir]] keys the
-    * artifact on the corpus file-listing signature (per-path-locked,
-    * exit-deleted, fresh generation on corpus mutation), so stale codes
-    * are structurally impossible and two concurrent first callers cannot
-    * interleave overwrite/read. Codes are a deterministic pure function
-    * of the fixed codebooks, so serving from the parquet is
-    * value-identical to inline encoding (the q_pq_topk oracle hash
-    * proves it).
+    * cost at serve time. Codes are a deterministic pure function of the
+    * fixed codebooks, so serving from the parquet is value-identical to
+    * inline encoding (the q_pq_topk oracle hash proves it).
+    *
+    * The artifact carries the IVF cell id and the label alongside the
+    * codes — one corpus pass builds the ENTIRE filtered-IVF-PQ index
+    * (cell + metadata + M-byte codes per vector), which is exactly the
+    * on-disk layout a production billion-vector tier ships: [[pqTopK]]
+    * prunes cent_id away, [[ivfPqTopK]] joins its probes against it,
+    * [[filteredAnnTopK]] pushes its metadata predicate to this scan.
+    *
+    * INCREMENTAL: every call compares the corpus listing with the current
+    * generation's through [[graft.util.Generations.refresh]], the one
+    * lifecycle the postings index and the hourly rollup share. Codes are
+    * ROW-LOCAL (each vector's cell + codes is a pure function of that
+    * vector and the fixed literals), so when the corpus only grew, ONLY
+    * the appended files' rows are encoded and appended to the current
+    * codes parquet — at 100 TB a daily batch never re-encodes the other
+    * 99.9% (the stored files stay byte-identical, PqRefreshSpec). A
+    * removed or rewritten file re-encodes the corpus into a fresh
+    * generation, since stored codes might describe vanished rows.
     */
-  private[graft] def ensurePqCodes(spark: SparkSession, sfDir: String): String = {
+  private[graft] def ensurePqCodes(spark: SparkSession,
+                                   sfDir: String): graft.util.Generations.Gen = {
     val emb = Tables.embeddings(spark, sfDir)
-    graft.util.Scratch.memoizedDir(spark,
+    graft.util.Generations.refresh(spark,
       "graft_pqcodes_" + graft.util.Scratch.valueToken(sfDir),
-      Tables.listingSig(emb)) { path =>
-      val dim = embeddingDim(spark, sfDir)
-      // the artifact carries the IVF cell id and the label alongside the
-      // codes — one corpus pass builds the ENTIRE filtered-IVF-PQ index
-      // (cell + metadata + M-byte codes per vector), which is exactly the
-      // on-disk layout a production billion-vector tier ships: [[pqTopK]]
-      // prunes cent_id away, [[ivfPqTopK]] joins its probes against it,
-      // [[filteredAnnTopK]] pushes its metadata predicate to this scan
-      emb.select(col("vec_id"), col("label"),
-          argmaxCell(serveCellScores(col("embedding"), dim)).as("cent_id"),
-          pqEncode(col("embedding"), dim).as("codes"))
-        .write.mode("overwrite").parquet(path)
+      Tables.listingSig(emb))(
+      encodePq(emb, embeddingDim(spark, sfDir)).write.mode("overwrite").parquet(_)) {
+      (cur, files, _) =>
+        encodePq(spark.read.schema(emb.schema).parquet(files: _*),
+          embeddingDim(spark, sfDir)).write.mode("append").parquet(cur.path)
+        cur.path
     }
   }
-
-  // ——— Incremental PQ-codes maintenance ———
-  //
-  // [[ensurePqCodes]] rebuilds from scratch whenever the corpus mutates —
-  // correct, but at 100 TB a daily append batch must not re-encode the
-  // other 99.9% of the corpus. Codes are ROW-LOCAL (each vector's cell +
-  // codes is a pure function of that vector and the fixed literals), so
-  // the artifact is embarrassingly delta-able: encode ONLY the appended
-  // files' rows and append them to the codes parquet. Removals and
-  // rewrites fall back HONESTLY to a full re-encode (stored codes might
-  // describe vanished rows) — the same lifecycle as the postings index
-  // refresh ([[MaterializedIndex]] via [[graft.util.ListingDiff]]).
-
-  /** Artifact generation per corpus dir: the codes path + the corpus
-    * listing signature it covers. NOT the signature-less memo pattern:
-    * every read path below compares the stored signature against the
-    * CURRENT listing and refreshes/rebuilds on any mismatch.
-    */
-  private case class PqGen(path: String, sig: String)
-  private val pqGens = scala.collection.concurrent.TrieMap[String, PqGen]()
-  private val pqGenLocks = scala.collection.concurrent.TrieMap[String, Object]()
-
-  /** Spec observability: what the last ensure call did
-    * ("current" | "delta" | "full").
-    */
-  private[graft] val lastPqRefreshMode =
-    new java.util.concurrent.atomic.AtomicReference[String]("none")
 
   private[graft] def encodePq(df: DataFrame, dim: Int): DataFrame =
     df.select(col("vec_id"), col("label"),
       argmaxCell(serveCellScores(col("embedding"), dim)).as("cent_id"),
       pqEncode(col("embedding"), dim).as("codes"))
-
-  /** Generation-aware ensure: serve the current artifact when the corpus
-    * is unchanged; APPEND-encode exactly the new files when the corpus
-    * grew; full-rebuild into a fresh generation otherwise.
-    */
-  private[graft] def ensurePqCodesIncremental(spark: SparkSession,
-                                              sfDir: String): String = {
-    val lock = pqGenLocks.getOrElseUpdate(sfDir, new Object)
-    lock.synchronized {
-      val emb = Tables.embeddings(spark, sfDir)
-      val curSig = Tables.listingSig(emb)
-      val dim = embeddingDim(spark, sfDir)
-      def fullBuild(): String = {
-        // fresh sig-suffixed generation (the memoizedDir convention), so
-        // in-flight readers of an old generation never see a mid-scan swap
-        val path = graft.util.Scratch.dir(spark,
-          "graft_pqcodes_inc_" + graft.util.Scratch.valueToken(sfDir) +
-            "_g" + graft.util.Scratch.valueToken(curSig).takeRight(12))
-        encodePq(emb, dim).write.mode("overwrite").parquet(path)
-        lastPqRefreshMode.set("full")
-        pqGens.put(sfDir, PqGen(path, curSig))
-        path
-      }
-      pqGens.get(sfDir) match {
-        case Some(g) if g.sig == curSig =>
-          lastPqRefreshMode.set("current"); g.path
-        case Some(g) =>
-          graft.util.ListingDiff.deltaFiles(g.sig, curSig) match {
-            case Some(newFiles) if newFiles.nonEmpty =>
-              // append-only growth: encode the delta rows alone — the
-              // stored codes files are never touched (spec-asserted)
-              encodePq(spark.read.schema(emb.schema).parquet(newFiles: _*), dim)
-                .write.mode("append").parquet(g.path)
-              lastPqRefreshMode.set("delta")
-              pqGens.put(sfDir, PqGen(g.path, curSig))
-              g.path
-            case _ => fullBuild() // shrink/rewrite → honest full re-encode
-          }
-        case None => fullBuild()
-      }
-    }
-  }
 
   /** Per-cell fingerprint of a codes artifact — (cent_id, n_vecs,
     * sum_ids, code_cks): scalar rows any engine can sort and hash, with
@@ -756,9 +695,6 @@ object Similarity {
           lit(0), (acc, x) => acc + x).cast("long")).as("code_cks"))
       .orderBy("cent_id")
 
-  private val pqRefreshStage =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** q_ivfpq_refresh: the ANN-index maintenance lifecycle under one
     * driver-checked oracle — stage a private copy of the embeddings,
     * full-build the codes artifact, APPEND a deterministic batch (the
@@ -772,26 +708,10 @@ object Similarity {
     * q_index_refresh.
     */
   def ivfPqRefresh(spark: SparkSession, sfDir: String): DataFrame = {
-    // the staging memo is keyed on (sfDir, SOURCE listing signature) —
-    // keying on sfDir alone would serve a stale staged copy (and a stale
-    // fingerprint) after a mid-JVM corpus mutation, the exact staleness
-    // class every other memo eliminates; the generation suffix gives
-    // each corpus state its own staging dir
-    val srcSig = Tables.listingSig(Tables.embeddings(spark, sfDir))
-    val dir = pqRefreshStage.getOrElseUpdate(s"$sfDir|$srcSig", {
-      val d = graft.util.Scratch.dir(spark,
-        "graft_pqrefresh_base_" + graft.util.Scratch.valueToken(sfDir) +
-          "_g" + graft.util.Scratch.valueToken(srcSig).takeRight(12))
-      val raw = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      raw.coalesce(1).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-      ensurePqCodesIncremental(spark, d)
-      raw.filter(col("vec_id") < 100)
-        .withColumn("vec_id", col("vec_id") + 10000)
-        .coalesce(1).write.mode("append").parquet(s"$d/embeddings.parquet")
-      d
-    })
-    pqArtifactFingerprint(
-      spark.read.parquet(ensurePqCodesIncremental(spark, dir)))
+    val dir = graft.util.Generations.staged(spark, "graft_pqrefresh_base_",
+      sfDir, "embeddings")(ensurePqCodes(spark, _))(
+      _.filter(col("vec_id") < 100).withColumn("vec_id", col("vec_id") + 10000))
+    pqArtifactFingerprint(spark.read.parquet(ensurePqCodes(spark, dir).path))
   }
 
   /** PQ-compressed top-k serving: read the MATERIALIZED codes (32×
@@ -807,7 +727,7 @@ object Similarity {
              nQueries: Int, k: Int): DataFrame = {
     val dim = embeddingDim(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
-    val corpus = spark.read.parquet(ensurePqCodes(spark, sfDir))
+    val corpus = spark.read.parquet(ensurePqCodes(spark, sfDir).path)
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val scored = corpus.crossJoin(broadcast(q))
@@ -858,7 +778,7 @@ object Similarity {
                 nprobe: Int = 3, rerank: Int = 30): DataFrame = {
     val dim = embeddingDim(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
-    val index = spark.read.parquet(ensurePqCodes(spark, sfDir))
+    val index = spark.read.parquet(ensurePqCodes(spark, sfDir).path)
     val probes = serveProbes(emb, dim, nQueries, nprobe)
     // each corpus vector lives in exactly ONE cell, so the probe join
     // yields each (query, vec) pair at most once — no dedup needed
@@ -939,7 +859,7 @@ object Similarity {
                       maxLabel: Int = 4): DataFrame = {
     val dim = embeddingDim(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
-    val index = spark.read.parquet(ensurePqCodes(spark, sfDir))
+    val index = spark.read.parquet(ensurePqCodes(spark, sfDir).path)
       .filter(col("label") <= maxLabel)
     val probes = serveProbes(emb, dim, nQueries, nprobe)
     val scored = index.join(broadcast(probes), "cent_id")

@@ -109,9 +109,8 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** File-listing signature of a table's base relation — the staleness
-    * fingerprint every memoized artifact keys on (the `_base_sig`
-    * discipline): same files+sizes+mtimes ⟺ same signature. In-memory
-    * FileIndex metadata, no data read.
+    * fingerprint every memoized artifact keys on: same files+sizes+mtimes
+    * ⟺ same signature. In-memory FileIndex metadata, no data read.
     */
   private[graft] def listingSig(df: DataFrame): String =
     df.queryExecution.analyzed.collectFirst {

@@ -10,7 +10,7 @@ import graft.sources.Tables
   * micro-batch by micro-batch: each arriving embedding batch is
   * delta-encoded INSIDE `foreachBatch` (codes are row-local — a pure
   * function of the vector and the fixed centroid/codebook literals, the
-  * same property [[Similarity.ensurePqCodesIncremental]] exploits in
+  * same property [[Similarity.ensurePqCodes]] exploits in
   * batch) and appended to a [[StateGenerations]] generation of the codes
   * parquet: v(n+1) = hardlinks of v(n) + the delta's part files.
   *

@@ -93,12 +93,12 @@ object Scratch {
     * executors hold open mid-scan — a FILE_NOT_EXIST failure in a query
     * that did nothing wrong. Registered for deletion at JVM exit.
     */
-  def dir(spark: org.apache.spark.sql.SparkSession, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(root(spark), s"${name}_p$procToken")
-      .toString
-    ownedDirs.add(p)
-    p
-  }
+  def dir(spark: org.apache.spark.sql.SparkSession, name: String): String =
+    owned(new org.apache.hadoop.fs.Path(root(spark), s"${name}_p$procToken")
+      .toString)
+
+  /** Register `p` for deletion at JVM exit, as [[dir]] does. */
+  private[graft] def owned(p: String): String = { ownedDirs.add(p); p }
 
   private def sha256Hex(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
@@ -128,10 +128,9 @@ object Scratch {
     * (name, signature) — callers re-enter for free while the signature
     * (an input file-listing fingerprint) is unchanged, and a CHANGED
     * signature rebuilds the staging rather than silently serving stale
-    * data (the `_base_sig` discipline of the materialized index, applied
-    * to every staged feed/count table). The dir lives under [[dir]]
-    * (exit-deleted), NOT in a per-invocation ScratchSlot: staged inputs
-    * are read-only for every consumer, so one copy serves all of them.
+    * data. The dir lives under [[dir]] (exit-deleted), NOT in a
+    * per-invocation ScratchSlot: staged inputs are read-only for every
+    * consumer, so one copy serves all of them.
     *
     * The signature is part of the PATH (a generation suffix), so a
     * rebuild lands in a FRESH directory: a lazy DataFrame an earlier call
@@ -186,8 +185,8 @@ object Scratch {
     * partition upsert) its own private copy of an immutable build artifact
     * without re-running — or re-copying — the build. Deleting or
     * overwriting a link in the clone never touches the shared source
-    * files. `skip` filters top-level-relative names (sidecars like
-    * `_base_sig` that describe the SOURCE, not the clone).
+    * files. `skip` filters relative names (markers like `_SUCCESS` that
+    * describe the SOURCE, not the clone).
     */
   def hardlinkTree(src: String, dst: String,
                    skip: String => Boolean = _ => false): Unit = {

@@ -178,13 +178,26 @@ class AggRewriteSpec extends SparkTestBase {
   }
 
   test("incremental refresh lifts the staleness veto via the delta file only") {
+    // the refresh must have read exactly the ONE appended file: read off
+    // the generation a self-contained staging's refresh made
+    val root = java.nio.file.Files.createTempDirectory("graft_mv_incr_")
+    try {
+      val dir = root.toString
+      val raw = spark.read.parquet(s"$sf/events.parquet")
+      raw.coalesce(1).write.parquet(s"$dir/events.parquet")
+      RollupView.ensure(spark, dir)
+      raw.orderBy("event_id").limit(500).coalesce(1)
+        .write.mode("append").parquet(s"$dir/events.parquet")
+      val g = RollupView.refresh(spark, dir)
+      assert(g.delta.size === 1, s"delta read ${g.delta}")
+      // an unchanged base is current: the same generation and path
+      assert(RollupView.refresh(spark, dir) === g)
+      assert(scanPaths(RollupView.byTypeServe(spark, dir)).exists(_.contains(g.path)))
+    } finally graft.util.Scratch.deleteRecursively(root)
     val df = RollupView.refreshedServe(spark, sf)
-    // the refresh must have read exactly the ONE appended file
-    assert(RollupView.lastDeltaFiles.get().size === 1,
-      s"delta read ${RollupView.lastDeltaFiles.get()}")
     // ...and the serve must come from the REFRESHED generation (g1)
     val paths = scanPaths(df)
-    assert(paths.exists(_.contains("/g1")), s"no refreshed view scan in $paths")
+    assert(paths.exists(_.contains("_g1")), s"no refreshed view scan in $paths")
     assert(!paths.exists(_.contains("events.parquet")),
       s"base scan survived the rewrite: $paths")
     // refreshed state ≡ a from-scratch rebuild of the mutated base
@@ -203,15 +216,37 @@ class AggRewriteSpec extends SparkTestBase {
     // OVERWRITE (not append): stored cells may describe vanished rows
     raw.limit(2000).coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/events.parquet")
-    RollupView.refresh(spark, dir)
-    assert(RollupView.lastDeltaFiles.get().isEmpty,
-      "an overwrite must not be treated as a delta")
+    val g = RollupView.refresh(spark, dir)
+    assert(g.n === 1 && g.delta.isEmpty,
+      s"an overwrite must not be treated as a delta: $g")
     val df = RollupView.byTypeServe(spark, dir)
-    assert(scanPaths(df).exists(_.contains("/g1")),
+    assert(scanPaths(df).exists(_.contains("_g1")),
       s"not served from the rebuilt generation: ${scanPaths(df)}")
     val expected = withoutRule(RollupView.byTypeServe(spark, dir).collect().toSeq)
     assert(df.collect().toSeq === expected)
     graft.util.Scratch.deleteRecursively(root)
+  }
+
+  test("the q_mv_refresh round trip follows a source base changed in the JVM") {
+    // serve, append to the SOURCE, serve again: the second serve must
+    // stage the changed source, not reuse the first copy
+    val root = java.nio.file.Files.createTempDirectory("graft_mv_src_")
+    val src = root.resolve("src").toString
+    val exp = root.resolve("exp").toString
+    try {
+      val raw = spark.read.parquet(s"$sf/events.parquet").orderBy("event_id").limit(2000)
+      raw.coalesce(1).write.parquet(s"$src/events.parquet")
+      RollupView.refreshedServe(spark, src).collect()
+      raw.limit(300).withColumn("event_id", col("event_id") + 1000000).coalesce(1)
+        .write.mode("append").parquet(s"$src/events.parquet")
+      val got = RollupView.refreshedServe(spark, src).collect().toSeq
+      // the same query, rule off, over the changed source plus the batch
+      val changed = spark.read.parquet(s"$src/events.parquet")
+      changed.coalesce(1).write.parquet(s"$exp/events.parquet")
+      changed.orderBy("event_id").limit(500).coalesce(1)
+        .write.mode("append").parquet(s"$exp/events.parquet")
+      assert(got === withoutRule(RollupView.byTypeServe(spark, exp).collect().toSeq))
+    } finally graft.util.Scratch.deleteRecursively(root)
   }
 
   test("a filter on the hour key itself rewrites") {

@@ -186,10 +186,10 @@ class CovarianceSpec extends SparkTestBase {
   }
 
   test("power iteration returns the dominant eigenpair") {
-    val (v, lambda) = Covariance.pcaTopComponent(spark, sf)
-    val d = v.length
     val rows = Covariance.covarianceGrid(spark, sf)
       .select("dim_i", "dim_j", "cov").collect()
+    val (v, lambda, _) = Covariance.eigenFromGrid(rows, 2000)
+    val d = v.length
     val a = Array.ofDim[Double](d, d)
     rows.foreach { r =>
       a(r.getInt(0))(r.getInt(1)) = r.getDouble(2)

@@ -127,9 +127,9 @@ class IndexRewriteSpec extends SparkTestBase {
     IndexRewrite.ensure(spark, dir)
     raw.orderBy("doc_id").limit(200).coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    IndexRewrite.ensureRefreshed(spark, dir)
-    assert(graft.operators.MaterializedIndex.lastDeltaFiles.get().isEmpty,
-      "an overwrite must not be treated as a delta")
+    val g = IndexRewrite.ensureRefreshed(spark, dir)
+    assert(g.n === 1 && g.delta.isEmpty,
+      s"an overwrite must not be treated as a delta: $g")
     val df = topTerms(spark, dir)
     val paths = scanPaths(df)
     assert(paths.exists(_.contains("_g1")),
@@ -141,10 +141,8 @@ class IndexRewriteSpec extends SparkTestBase {
   }
 
   test("incremental index refresh tokenizes the delta only and serves from g1") {
-    // self-contained staging (NOT refreshedServe's memoized one): the
-    // lastDeltaFiles observability ref is global and other tests — the
-    // rebuild fallback above, any suite that already ran q_index_refresh
-    // — overwrite it, so it must be read right after OUR OWN refresh
+    // self-contained staging (NOT refreshedServe's memoized one), so the
+    // generation read below is the one OUR OWN refresh made
     val root = java.nio.file.Files.createTempDirectory("graft_idx_incr_")
     val dir = root.toString
     val raw = spark.read.parquet(s"$sf/documents.parquet")
@@ -152,10 +150,11 @@ class IndexRewriteSpec extends SparkTestBase {
     IndexRewrite.ensure(spark, dir)
     raw.orderBy("doc_id").limit(300).coalesce(1)
       .write.mode("append").parquet(s"$dir/documents.parquet")
-    IndexRewrite.ensureRefreshed(spark, dir)
+    val g = IndexRewrite.ensureRefreshed(spark, dir)
     // the refresh must have aggregated exactly the ONE appended file
-    assert(graft.operators.MaterializedIndex.lastDeltaFiles.get().size === 1,
-      s"delta read ${graft.operators.MaterializedIndex.lastDeltaFiles.get()}")
+    assert(g.delta.size === 1, s"delta read ${g.delta}")
+    // an unchanged corpus is current: the same generation and path
+    assert(IndexRewrite.ensureRefreshed(spark, dir) === g)
     val df = topTerms(spark, dir)
     val paths = scanPaths(df)
     assert(paths.exists(_.contains("_g1")), s"no refreshed index scan in $paths")
@@ -167,6 +166,28 @@ class IndexRewriteSpec extends SparkTestBase {
     assert(got === expected)
     assert(got.nonEmpty)
     graft.util.Scratch.deleteRecursively(root)
+  }
+
+  test("the q_index_refresh round trip follows a source corpus changed in the JVM") {
+    // serve, append to the SOURCE, serve again: the second serve must
+    // stage the changed source, not reuse the first copy
+    val root = java.nio.file.Files.createTempDirectory("graft_idx_src_")
+    val src = root.resolve("src").toString
+    val exp = root.resolve("exp").toString
+    try {
+      val raw = spark.read.parquet(s"$sf/documents.parquet").orderBy("doc_id").limit(120)
+      raw.coalesce(1).write.parquet(s"$src/documents.parquet")
+      IndexRewrite.refreshedServe(spark, src).collect()
+      raw.limit(40).withColumn("doc_id", col("doc_id") + 100000).coalesce(1)
+        .write.mode("append").parquet(s"$src/documents.parquet")
+      val got = IndexRewrite.refreshedServe(spark, src).collect().toSeq
+      // the same query, rule off, over the changed source plus the batch
+      val changed = spark.read.parquet(s"$src/documents.parquet")
+      changed.coalesce(1).write.parquet(s"$exp/documents.parquet")
+      changed.orderBy("doc_id").limit(300).coalesce(1)
+        .write.mode("append").parquet(s"$exp/documents.parquet")
+      assert(got === withoutRule(topTerms(spark, exp).collect().toSeq))
+    } finally graft.util.Scratch.deleteRecursively(root)
   }
 
   test("the q_index_refresh lifecycle query serves the refreshed state") {

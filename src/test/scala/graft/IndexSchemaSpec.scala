@@ -53,7 +53,7 @@ class IndexSchemaSpec extends SparkTestBase
     MaterializedIndex.ensure(spark, corpus)
     raw.orderBy("doc_id").limit(50).coalesce(1)
       .write.mode("append").parquet(s"$corpus/documents.parquet")
-    val g1 = MaterializedIndex.refresh(spark, corpus)
+    val g1 = MaterializedIndex.refresh(spark, corpus).path
     assert(g1.endsWith("_g1"), g1)
     assert(inferred(g1) === Indexer.termIndexSchema)
   }

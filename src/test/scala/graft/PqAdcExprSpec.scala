@@ -15,7 +15,7 @@ class PqAdcExprSpec extends SparkTestBase {
 
   test("native ADC == HOF twin bitwise over real codes and queries") {
     val dim = 64
-    val codes = spark.read.parquet(Similarity.ensurePqCodes(spark, sf))
+    val codes = spark.read.parquet(Similarity.ensurePqCodes(spark, sf).path)
     val q = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
