@@ -125,7 +125,7 @@ object Harness {
     "positional" -> ((s, d) => { MaterializedIndex.ensurePositional(s, d); () }),
     "shingles" -> ((s, d) => { Dedup.ensureShingles(s, d); () }),
     "jaccard_pairs" -> ((s, d) => { Dedup.ensureJaccardPairs(s, d, 0.8); () }),
-    "dup_groups" -> ((s, d) => { Dedup.ensureDupGroups(s, d); () }),
+    "dup_groups" -> ((s, d) => { Dedup.ensureDupGroups(s, Dedup.corpus(s, d)); () }),
     "dup_clusters" -> ((s, d) => { Dedup.ensureClusters(s, d, 0.8); () }),
     "bucketed_tables" -> ((s, d) => { Bucketing.ensureBucketed(s, d); () }),
     "clustered_layout" -> ((s, d) => { Clustering.ensureClustered(s, d); () }),

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, KnownNotContainsNull, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
@@ -186,4 +186,11 @@ object SortedIntersectExpr {
   def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnBridge.column(SortedLongIntersectCount(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** `a` with its array elements declared non-null, for arrays read back
+    * from parquet: a file read declares every array nullable, whatever
+    * the writer produced. Adds no per-row work.
+    */
+  def nullFreeElements(a: Column): Column =
+    ColumnBridge.column(KnownNotContainsNull(ColumnBridge.expression(a)))
 }

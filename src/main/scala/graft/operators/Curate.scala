@@ -38,11 +38,12 @@ object Curate {
   def curateCorpus(spark: SparkSession, sfDir: String,
                    minTokens: Int = MinTokens,
                    maxTokens: Int = MaxTokens): DataFrame = {
-    val toks = Tables.documents(spark, sfDir)
+    val c = Dedup.corpus(spark, sfDir)
+    val toks = c.docs
       .select(col("doc_id"), col("lang"),
         size(tokens(col("text"))).cast("long").as("n_tokens"))
-    val exactKeepers = Dedup.exactKeeperIds(spark, sfDir)
-    val nearLosers = Dedup.dupClusters(spark, sfDir, NearDupThreshold)
+    val exactKeepers = Dedup.exactKeeperIds(c.docs)
+    val nearLosers = Dedup.clusterLabels(spark, c, NearDupThreshold)
       .filter(col("cluster_id") =!= col("doc_id")).select("doc_id")
     toks
       .join(exactKeepers, Seq("doc_id"), "left_semi")
@@ -96,12 +97,12 @@ object Curate {
                     threshold: Double = 0.8, minKept: Int = 5,
                     budgetTokens: Long = 2048): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cl = spark.read
-      .parquet(Dedup.ensureClusters(spark, sfDir, threshold))
+    val c = Dedup.corpus(spark, sfDir)
+    val cl = Dedup.clusterLabels(spark, c, threshold)
       .select("doc_id", "cluster_id")
     val keeperRank = Window.partitionBy(col("cid"))
       .orderBy(col("n_chars").desc, col("doc_id"))
-    val keepers = Tables.documents(spark, sfDir)
+    val keepers = c.docs
       .select("doc_id", "n_chars")
       .join(cl, Seq("doc_id"), "left")
       .withColumn("cid", coalesce(col("cluster_id"), col("doc_id")))
@@ -140,12 +141,13 @@ object Curate {
   def curationFunnel(spark: SparkSession, sfDir: String,
                      minTokens: Int = MinTokens, maxTokens: Int = MaxTokens,
                      maxPii: Long = Privacy.MaxPiiDefault): DataFrame = {
-    val toks = Tables.documents(spark, sfDir)
+    val c = Dedup.corpus(spark, sfDir)
+    val toks = c.docs
       .select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("n_tokens"))
-    val exact = Dedup.exactKeeperIds(spark, sfDir)
+    val exact = Dedup.exactKeeperIds(c.docs)
       .withColumn("is_exact", lit(true))
-    val nearLosers = Dedup.dupClusters(spark, sfDir, NearDupThreshold)
+    val nearLosers = Dedup.clusterLabels(spark, c, NearDupThreshold)
       .filter(col("cluster_id") =!= col("doc_id"))
       .select(col("doc_id"), lit(true).as("is_loser"))
     val pii = Privacy.piiPerDoc(spark, sfDir)

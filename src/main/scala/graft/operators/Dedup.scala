@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.functions.TextFunctions._
 import graft.sources.Tables
@@ -45,9 +46,8 @@ object Dedup {
     * [[Curate.curateCorpus]] consumes: a plain partial-aggregated groupBy,
     * no window sort over the corpus.
     */
-  private[graft] def exactKeeperIds(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), sha2(col("text"), 256).as("fp"))
+  private[graft] def exactKeeperIds(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), sha2(col("text"), 256).as("fp"))
       .groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
 
@@ -82,7 +82,86 @@ object Dedup {
         .write.mode("overwrite").parquet(path)
     }
 
-  /** Exact-verify candidate pairs: |A∩B| per pair, Jaccard from
+  /** One corpus as a dedup build sees it: its dir, ONE documents scan
+    * and that scan's listing signature. A top-level build takes it once
+    * and hands it to every artifact it builds or reads: each fresh
+    * [[Tables.documents]] call infers the parquet schema in a Spark job,
+    * and every artifact keys on the same signature.
+    */
+  private[graft] final case class Corpus(dir: String, docs: DataFrame, sig: String)
+
+  private[graft] def corpus(spark: SparkSession, sfDir: String): Corpus = {
+    val docs = Tables.documents(spark, sfDir)
+    Corpus(sfDir, docs, Tables.listingSig(docs))
+  }
+
+  /** Read a dedup scratch artifact with its schema DECLARED, as
+    * [[Indexer.readIndex]] does: an inferring read runs a one-task footer
+    * job per call. `ids` are doc-id columns (bigint), `rest` the others.
+    */
+  private def readArtifact(spark: SparkSession, path: String, ids: Seq[String],
+                           rest: StructField*): DataFrame =
+    spark.read.schema(StructType(ids.map(StructField(_, LongType)) ++ rest))
+      .parquet(path)
+
+  /** Write `df` to `path` and return `metric`, aggregated over the
+    * written rows by the write job itself (no second scan).
+    */
+  private def writeObserved(df: DataFrame, path: String, metric: Column): Long = {
+    val obs = new org.apache.spark.sql.Observation()
+    df.observe(obs, metric.as("m")).write.mode("overwrite").parquet(path)
+    obs.get.get("m") match { case Some(n: Number) => n.longValue(); case _ => 0L }
+  }
+
+  /** Each doc's distinct word-3-gram shingle set PACKED as one row,
+    * (doc_id, hs: sorted array<bigint>, n_sh), MATERIALIZED once per
+    * corpus state: the one artifact every near-dup plan of the curate
+    * pass derives from (the identical-set group map, the PPJoin
+    * candidates, every exact verify). Built ROW-LOCALLY from the
+    * documents scan; the only exchange merges repeated doc_ids, on
+    * document-sized rows, never the shingle rows. Docs with no shingle
+    * get no row, as in [[shingleIndex]], and the rows equal a groupBy
+    * packing of [[shingleIndex]] (spec-pinned). Array size scales with
+    * the DOC, not the corpus (10³–10⁴ shingles → 8–80 KB for web-scale
+    * documents).
+    *
+    * Shingles ride as their xxhash64 (guide §2.3, narrower types): 8
+    * bytes carry what the ~15–25-byte string did. Everything downstream
+    * needs only equality and a total order: df counts are
+    * per-shingle-identity, the PPJoin rarity order (df, sh) stays a
+    * consistent global total order under hashing (ties among equal-df
+    * shingles break differently, which can only perturb WHICH
+    * candidates the prefix filter emits — the exact verify keeps the
+    * verified output identical), and the verify counts hash identity
+    * (the collision bound is at [[verifyPairs]]). The arrays are SORTED:
+    * the verify's two-pointer merge count
+    * ([[graft.functions.SortedIntersectExpr]]) needs sorted operands, and
+    * one row-local sort here buys an allocation- and hash-free walk per
+    * CANDIDATE.
+    */
+  private[graft] def ensureShingleSets(spark: SparkSession, c: Corpus): String =
+    graft.util.Scratch.memoizedDir(spark,
+      "graft_shinglesets_" + graft.util.Scratch.valueToken(c.dir), c.sig) { path =>
+      // the empty sets are dropped AFTER the merge: a filter on the
+      // per-row sets would be pushed below their projection and re-run
+      // the tokenizer or the shingling in the filter
+      c.docs
+        .select(col("doc_id"), tokens(col("text")).as("ts"))
+        .select(col("doc_id"), transform(
+          array_distinct(shinglesOfTokens(col("ts"), 3)), s => xxhash64(s)).as("hs"))
+        .groupBy("doc_id").agg(sort_array(flatten(collect_list(col("hs")))).as("hs"))
+        .select(col("doc_id"), col("hs"), size(col("hs")).cast("long").as("n_sh"))
+        .where(col("n_sh") > 0)
+        .write.mode("overwrite").parquet(path)
+    }
+
+  private[graft] def shingleSets(spark: SparkSession, c: Corpus): DataFrame =
+    readArtifact(spark, ensureShingleSets(spark, c), Seq("doc_id"),
+        StructField("hs", ArrayType(LongType)), StructField("n_sh", LongType))
+      .withColumn("hs", graft.functions.SortedIntersectExpr.nullFreeElements(col("hs")))
+
+  /** Exact-verify candidate pairs against packed shingle sets
+    * ([[ensureShingleSets]] rows): |A∩B| per pair, Jaccard from
     * |A|+|B|−|A∩B|, keep ≥ threshold. Shared by the exact
     * (prefix-filtered) and MinHash-LSH paths — both are therefore
     * false-positive-free. Requires threshold > 0 (a 0-overlap pair is
@@ -95,11 +174,10 @@ object Dedup {
     * into |A| shuffled rows before the match even happens — measured
     * 50 s for 2M candidates at the 20× smoke, 17.7× the base cost,
     * because Σ_cand |A| rows (~120M) ride two exchanges and a
-    * re-aggregation. Packing each doc's distinct-shingle set ONCE into
-    * an int64-hash array ([[packedShingleSets]], linear) turns
-    * verification into two compact hash joins (candidate rows against a
-    * |docs|-sized relation) plus a ROW-LOCAL `array_intersect` — same
-    * 2M candidates in 10.8 s, and per-candidate cost is now independent
+    * re-aggregation. With each doc's set packed ONCE into an int64-hash
+    * array, verification is two compact hash joins (candidate rows
+    * against a |docs|-sized relation) plus a ROW-LOCAL intersect count —
+    * same 2M candidates in 10.8 s, and per-candidate cost is independent
     * of how many OTHER candidates share the endpoint. This is how every
     * production set-similarity join implements its verify step (the
     * record layout of PPJoin's verification, Xiao et al. WWW'08 §5).
@@ -111,38 +189,9 @@ object Dedup {
     * probability of a cosmic-ray bit error; the declared-query oracles
     * compare against string-exact Jaccard and stay green.
     */
-  private[graft] def verifyPairs(sh: DataFrame, cand: DataFrame,
-                          threshold: Double,
-                          sorted: Boolean = true): DataFrame =
-    verifyPairsPacked(packedShingleSets(sh), cand, threshold, sorted)
-
-  /** (doc_id, hs: array<int64>, n_sh) — each doc's distinct-shingle set
-    * packed as one row. Array size scales with the DOC, not the corpus
-    * (10³–10⁴ shingles → 8–80 KB for web-scale documents), so rows stay
-    * well under any shuffle block concern at 100 TB.
-    */
-  private[graft] def packedShingleSets(sh: DataFrame): DataFrame =
-    // SORTED hash arrays: the verify consumes |A∩B| via the native
-    // two-pointer merge count ([[graft.functions.SortedIntersectExpr]]),
-    // which needs sorted operands — one row-local d·log d sort at pack
-    // time buys an allocation- and hash-free walk per CANDIDATE (each
-    // doc's set is intersected once per candidate it appears in)
-    sh.groupBy("doc_id").agg(
-      sort_array(collect_list(xxhash64(col("sh")))).as("hs"),
-      count(lit(1)).as("n_sh"))
-
-  /** Verify against a pre-built packed-set relation — the label build
-    * re-verifies across rounds and pays the packing exactly once.
-    */
-  private[graft] def verifyPairsPacked(packed: DataFrame, cand: DataFrame,
-                                       threshold: Double,
-                                       sorted: Boolean): DataFrame = {
-    val pa = packed.toDF("doc_a", "ha", "na")
-    val pb = packed.toDF("doc_b", "hb", "nb")
-    val verified = cand.join(pa, "doc_a").join(pb, "doc_b")
-      .withColumn("n_inter",
-        graft.functions.SortedIntersectExpr
-          .sortedIntersectCount(col("ha"), col("hb")))
+  private[graft] def verifyPairs(packed: DataFrame, cand: DataFrame,
+                                 threshold: Double, sorted: Boolean = true): DataFrame = {
+    val verified = withOverlap(packed, cand)
       .withColumn("jaccard", round(
         col("n_inter").cast("double") /
           (col("na") + col("nb") - col("n_inter")), 6))
@@ -152,6 +201,16 @@ object Dedup {
     // presentation sort — a wasted exchange before an order-free write
     if (sorted) verified.orderBy("doc_a", "doc_b") else verified
   }
+
+  /** `cand` with both endpoints' packed sets (ha, na, hb, nb) and their
+    * overlap |A∩B| as `n_inter`: two candidate-sized joins against the
+    * |docs|-sized packed relation and a row-local merge count.
+    */
+  private def withOverlap(packed: DataFrame, cand: DataFrame): DataFrame =
+    cand.join(packed.toDF("doc_a", "ha", "na"), "doc_a")
+      .join(packed.toDF("doc_b", "hb", "nb"), "doc_b")
+      .withColumn("n_inter", graft.functions.SortedIntersectExpr
+        .sortedIntersectCount(col("ha"), col("hb")))
 
   /** Exact all-pairs n-gram Jaccard ≥ threshold via PPJoin-style prefix
     * filtering (Bayardo et al. WWW'07, Xiao et al. WWW'08):
@@ -166,15 +225,13 @@ object Dedup {
     */
   def ngramJaccardPairs(spark: SparkSession, sfDir: String,
                         threshold: Double): DataFrame =
-    spark.read.parquet(ensureJaccardPairs(spark, sfDir, threshold))
+    readArtifact(spark, ensureJaccardPairs(spark, sfDir, threshold),
+        Seq("doc_a", "doc_b"), StructField("jaccard", DoubleType))
       .orderBy("doc_a", "doc_b")
 
-  private def jaccardMemoKey(spark: SparkSession, sfDir: String,
-                             threshold: Double,
-                             kind: String): (String, String) =
-    (s"graft_${kind}_" + graft.util.Scratch.valueToken(sfDir) +
-       "_" + graft.util.Scratch.valueToken(threshold.toString),
-     graft.sources.Tables.listingSig(Tables.documents(spark, sfDir)))
+  private def jaccardMemoKey(c: Corpus, threshold: Double, kind: String): String =
+    s"graft_${kind}_" + graft.util.Scratch.valueToken(c.dir) +
+      "_" + graft.util.Scratch.valueToken(threshold.toString)
 
   /** Materialize the verified pair relation once per (corpus state,
     * threshold) — the declared all-pairs query's artifact. Routed like
@@ -185,42 +242,42 @@ object Dedup {
     * the per-clique quadratic verify work.
     */
   private[graft] def ensureJaccardPairs(spark: SparkSession, sfDir: String,
-                                        threshold: Double): String = {
-    val (name, sig) = jaccardMemoKey(spark, sfDir, threshold, "jacpairs")
-    graft.util.Scratch.memoizedDir(spark, name, sig) { path =>
-      jaccardPairsPlan(spark, sfDir, threshold,
-          collapse = collapseRoute(spark, sfDir), sorted = false)
+                                        threshold: Double): String =
+    ensureJaccardPairs(spark, corpus(spark, sfDir), threshold)
+
+  private def ensureJaccardPairs(spark: SparkSession, c: Corpus,
+                                 threshold: Double): String =
+    graft.util.Scratch.memoizedDir(spark,
+        jaccardMemoKey(c, threshold, "jacpairs"), c.sig) { path =>
+      jaccardPairsPlan(spark, c, threshold,
+          collapse = dupPairsCount(spark, c) >= CollapseMinPairs, sorted = false)
         .write.mode("overwrite").parquet(path)
     }
-  }
 
-  /** The measured collapse-routing decision shared by the Jaccard pair
-    * build, the incremental label build, and [[minhashLshPairs]]: what
-    * the identical-set collapse saves is Σ gsz·(gsz−1)/2 same-set pairs
-    * removed from candidate generation + exact verify, and what it costs
-    * is a fixed handful of serve-side stages (the rep restriction and
-    * the member-expansion joins). The group-size aggregate runs off the
-    * tiny materialized map and is memoized per artifact generation
-    * ([[dupPairsCount]]), so repeated routing decisions pay a map read
-    * at most once per corpus state.
-    */
-  private def collapseRoute(spark: SparkSession, sfDir: String,
-                            collapseMinPairs: Long = CollapseMinPairs): Boolean =
-    dupPairsCount(spark, sfDir) >= collapseMinPairs
+  /** (doc_id, n_sh, sh) rows of packed shingle sets: one per shingle hash. */
+  private def exploded(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), col("n_sh"), explode(col("hs")).as("sh"))
 
-  /** PPJoin prefix+positional candidate pairs (doc_a < doc_b) over an
-    * arbitrary (doc_id, sh) relation — the shared candidate generator
-    * under the pair build and the incremental label build.
+  /** Each doc's rarity PREFIX (doc_id, sh, n_sh, rn): its first
+    * n_sh − ⌈t·n_sh⌉ + 1 shingles in ascending global (df, sh) order. A
+    * doc's set size `n_sh` rides its packed row, so the prefix takes ONE
+    * window, a row_number over the doc's shingles.
     */
-  private def ppjoinCandidates(sh: DataFrame, threshold: Double): DataFrame = {
+  private def rarityPrefix(sh: DataFrame, threshold: Double): DataFrame = {
     val freq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val byRarity = Window.partitionBy(col("doc_id"))
-      .orderBy(col("df"), col("sh"))
-    val prefix = sh.join(freq, "sh")
-      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      .withColumn("rn", row_number().over(byRarity))
+    sh.join(freq, "sh")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))))
       .filter(col("rn") <= col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
       .select("doc_id", "sh", "n_sh", "rn")
+  }
+
+  /** PPJoin prefix+positional candidate pairs (doc_a < doc_b) over packed
+    * shingle sets — the shared candidate generator under the pair build
+    * and the incremental label build.
+    */
+  private def ppjoinCandidates(sets: DataFrame, threshold: Double): DataFrame = {
+    val prefix = rarityPrefix(exploded(sets), threshold)
     // PPJoin POSITIONAL filter (Xiao et al. WWW'08 §3.2) on top of the
     // prefix join: J ≥ t needs overlap ≥ α = ⌈t/(1+t)·(|A|+|B|)⌉, and a
     // match at rarity positions (rnA, rnB) bounds the achievable overlap
@@ -250,6 +307,10 @@ object Dedup {
       .select("doc_a", "doc_b")
   }
 
+  // candidate rows per candidate-artifact generation, counted by the
+  // artifact's own write
+  private val candidateCounts = scala.collection.concurrent.TrieMap[String, Long]()
+
   /** Materialize the PPJoin candidate relation once per (corpus state,
     * threshold, route): the pair build consumes it once (verify), but
     * the incremental label build re-reads it every round (active-set
@@ -258,42 +319,24 @@ object Dedup {
     * the prefix self-join. Route is part of the key: the collapsed
     * route's candidates range over shingle-set representatives only.
     */
-  private[graft] def ensureJaccardCandidates(spark: SparkSession, sfDir: String,
-                                      threshold: Double,
-                                      overReps: Boolean): String = {
-    val (name, sig) = jaccardMemoKey(spark, sfDir, threshold,
-      if (overReps) "jaccand_reps" else "jaccand_all")
-    graft.util.Scratch.memoizedDir(spark, name, sig) { path =>
-      ppjoinCandidates(jaccardShingleSide(spark, sfDir, overReps), threshold)
-        .write.mode("overwrite").parquet(path)
+  private[graft] def ensureJaccardCandidates(spark: SparkSession, c: Corpus,
+                                             threshold: Double, overReps: Boolean): String =
+    graft.util.Scratch.memoizedDir(spark, jaccardMemoKey(c, threshold,
+        if (overReps) "jaccand_reps" else "jaccand_all"), c.sig) { path =>
+      candidateCounts(path) = writeObserved(
+        ppjoinCandidates(jaccardShingleSide(spark, c, overReps), threshold),
+        path, count(lit(1)))
     }
-  }
 
-  /** The shingle relation a route verifies against: the full corpus, or
-    * (collapsed route) shingle-set representatives only.
-    *
-    * Shingles ride as their xxhash64 (guide §2.3, narrower types): the
-    * string shingle (~15–25 bytes) crossed FIVE exchanges of the PPJoin
-    * pipeline (the df aggregation, its join back, the rarity window sort,
-    * and both legs of the prefix self-join) where 8 bytes carry the same
-    * information. Everything downstream needs only equality and a total
-    * order: df counts are per-shingle-identity, the rarity order
-    * (df, sh) stays a consistent global total order under hashing (ties
-    * among equal-df shingles break differently, which can only perturb
-    * WHICH candidates the prefix filter emits — the exact verify keeps
-    * the verified output identical), and the packed-set verify already
-    * counted hash identity (same ~|A|·|B|/2⁶⁴ per-pair collision bound
-    * disclosed at [[verifyPairs]]).
+  /** The packed shingle sets a route verifies against: the full corpus,
+    * or (collapsed route) shingle-set representatives only.
     */
-  private[graft] def jaccardShingleSide(spark: SparkSession, sfDir: String,
-                                 overReps: Boolean): DataFrame = {
-    val sh = shingleIndex(spark, sfDir)
-      .select(col("doc_id"), xxhash64(col("sh")).as("sh"))
-    if (!overReps) sh
-    else sh.join(
-      spark.read.parquet(ensureDupGroups(spark, sfDir))
-        .where(col("doc_id") === col("rep")).select("doc_id"),
-      "doc_id")
+  private[graft] def jaccardShingleSide(spark: SparkSession, c: Corpus,
+                                        overReps: Boolean): DataFrame = {
+    val sets = shingleSets(spark, c)
+    if (!overReps) sets
+    else sets.join(dupGroups(spark, c)
+      .where(col("doc_id") === col("rep")).select("doc_id"), "doc_id")
   }
 
   /** The full verified pair plan for one route. Both routes are exact
@@ -305,26 +348,36 @@ object Dedup {
     */
   private[graft] def jaccardPairsPlan(spark: SparkSession, sfDir: String,
                                       threshold: Double, collapse: Boolean,
-                                      sorted: Boolean = true): DataFrame = {
-    val sh = jaccardShingleSide(spark, sfDir, collapse)
-    val cand = spark.read.parquet(
-      ensureJaccardCandidates(spark, sfDir, threshold, collapse))
-    if (!collapse) return verifyPairs(sh, cand, threshold, sorted)
-    val members = spark.read.parquet(ensureDupGroups(spark, sfDir))
-    val repPairs = verifyPairs(sh, cand, threshold, sorted = false)
-    // expansion is Θ(output): member-map joins re-derive pair
-    // orientation (members of distinct groups interleave in id order),
-    // and within-group pairs are emitted at J = 1.0 via the capped
-    // group-pair primitive — never an unguarded self-join
+                                      sorted: Boolean = true): DataFrame =
+    jaccardPairsPlan(spark, corpus(spark, sfDir), threshold, collapse, sorted)
+
+  private def jaccardPairsPlan(spark: SparkSession, c: Corpus, threshold: Double,
+                               collapse: Boolean, sorted: Boolean): DataFrame = {
+    val sets = jaccardShingleSide(spark, c, collapse)
+    val cand = readArtifact(spark,
+      ensureJaccardCandidates(spark, c, threshold, collapse), Seq("doc_a", "doc_b"))
+    if (!collapse) return verifyPairs(sets, cand, threshold, sorted)
+    val all = memberPairs(dupGroups(spark, c),
+      verifyPairs(sets, cand, threshold, sorted = false), 256)
+    if (sorted) all.orderBy("doc_a", "doc_b") else all
+  }
+
+  /** Member pairs of verified representative pairs, by the identical-set
+    * group map: Θ(output). The member-map joins re-derive pair
+    * orientation (members of distinct groups interleave in id order),
+    * and within-group pairs are emitted at J = 1.0 via the capped
+    * group-pair primitive ([[groupedPairs]]) — never an unguarded
+    * self-join.
+    */
+  private def memberPairs(members: DataFrame, repPairs: DataFrame,
+                          cap: Int): DataFrame = {
     val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("a"))
     val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("b"))
     val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
       .select(least(col("a"), col("b")).as("doc_a"),
         greatest(col("a"), col("b")).as("doc_b"), col("jaccard"))
-    val within = groupedPairs(members, Seq("rep"), "doc_id", 256)
-      .withColumn("jaccard", lit(1.0))
-    val all = cross.unionAll(within)
-    if (sorted) all.orderBy("doc_a", "doc_b") else all
+    cross.unionAll(groupedPairs(members, Seq("rep"), "doc_id", cap)
+      .withColumn("jaccard", lit(1.0)))
   }
 
   /** CONTAINMENT pairs — the asymmetric complement of [[ngramJaccardPairs]]:
@@ -343,44 +396,25 @@ object Dedup {
     */
   def containmentPairs(spark: SparkSession, sfDir: String,
                        threshold: Double): DataFrame = {
-    val sh = shingleIndex(spark, sfDir)
-    val freq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val byRarity = Window.partitionBy(col("doc_id"))
-      .orderBy(col("df"), col("sh"))
-    val prefix = sh.join(freq, "sh")
-      .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      .withColumn("rn", row_number().over(byRarity))
-      .filter(col("rn") <= col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
-      .select("doc_id", "sh", "n_sh")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh_full"))
-    val cand = prefix.as("x")
+    val packed = shingleSets(spark, corpus(spark, sfDir))
+    val sh = exploded(packed)
+    val cand = rarityPrefix(sh, threshold).as("x")
       .join(sh.as("y"), col("x.sh") === col("y.sh") &&
-        col("x.doc_id") =!= col("y.doc_id"))
-      .join(sizes.withColumnRenamed("doc_id", "bid"),
-        col("y.doc_id") === col("bid") &&
-          col("n_sh_full") >= lit(threshold) * col("n_sh"))
+        col("x.doc_id") =!= col("y.doc_id") &&
+        col("y.n_sh") >= lit(threshold) * col("x.n_sh"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
     // VERIFY via packed-set intersection — the same physical upgrade the
-    // Jaccard path took ([[verifyPairsPacked]]'s header has the full
-    // argument, including the 64-bit-collision exactness bound): the old
+    // Jaccard path took ([[verifyPairs]]'s header has the full argument,
+    // including the 64-bit-collision exactness bound): the old
     // inverted-index verify joined the shingle relation onto BOTH
-    // endpoints of every candidate (sa.doc_id = doc_a, then sb.doc_id =
-    // doc_b ∧ sa.sh = sb.sh), exploding each candidate into |A| shuffled
-    // rows and re-aggregating — Σ_cand |A| rows across two exchanges.
-    // Packing each doc's shingle set once ([[packedShingleSets]], linear)
-    // turns it into two candidate-sized hash joins plus a ROW-LOCAL
-    // array_intersect; |A∩B|/|A| is computed from the same counts
-    // (packed n_sh ≡ n_sh_full: the shingle relation is distinct per doc
-    // by construction).
-    val packed = packedShingleSets(sh)
-    val pa = packed.toDF("doc_a", "ha", "na")
-    val pb = packed.toDF("doc_b", "hb", "nb")
-    cand.join(pa, "doc_a").join(pb, "doc_b")
-      .withColumn("containment",
-        round(graft.functions.SortedIntersectExpr
-          .sortedIntersectCount(col("ha"), col("hb")).cast("double") /
-          col("na"), 6))
+    // endpoints of every candidate, exploding each candidate into |A|
+    // shuffled rows and re-aggregating — Σ_cand |A| rows across two
+    // exchanges. Against the packed sets ([[ensureShingleSets]]) it is
+    // [[withOverlap]]'s two candidate-sized hash joins plus a ROW-LOCAL
+    // intersect count; |A∩B|/|A| is computed from the same counts.
+    withOverlap(packed, cand)
+      .withColumn("containment", round(col("n_inter").cast("double") / col("na"), 6))
       .filter(col("containment") >= threshold)
       .select("doc_a", "doc_b", "containment")
       .orderBy("doc_a", "doc_b")
@@ -512,37 +546,41 @@ object Dedup {
     small.unionAll(bigPairs)
   }
 
-  /** Per-doc fingerprint of the DISTINCT SHINGLE SET (sha-256 over the
-    * sorted set, NUL-joined — shingles are tokenized words + spaces, so
-    * NUL cannot occur and the encoding is injective). Docs with equal
-    * fingerprints have equal shingle sets: identical MinHash signatures,
-    * pairwise Jaccard exactly 1, and identical Jaccard against every
-    * third document. Only docs PRESENT in the shingle relation get a row
-    * (a shingle-less doc has no signature and can never pair — same as
-    * the un-collapsed path).
-    */
-  private def shingleSetFp(sh: DataFrame): DataFrame =
-    sh.groupBy("doc_id").agg(
-      sha2(concat_ws("\u0000", sort_array(collect_list(col("sh")))), 256)
-        .as("fp"))
+  // Σ gsz·(gsz−1)/2 over the identical-set groups per dup-groups
+  // artifact GENERATION, summed by the artifact's own write (the path
+  // embeds the corpus listing signature, so a mutated corpus lands on a
+  // fresh key)
+  private val dupPairsByPath = scala.collection.concurrent.TrieMap[String, Long]()
 
-  /** The identical-set GROUP MAP (doc_id, rep) MATERIALIZED once per
+  /** The identical-set GROUP MAP (doc_id, rep, gsz) MATERIALIZED once per
     * corpus state — the collapse artifact behind [[minhashLshPairs]]'
-    * dup-heavy guard. It is threshold-independent (a pure function of
-    * the shingle relation), so one build serves every LSH threshold,
-    * every bench pass, and an incremental batch run; the serve-side
-    * plans read a two-column parquet instead of re-running the
-    * collect-sort-hash collapse per invocation.
+    * dup-heavy guard. Docs group by a sha-256 digest of their packed
+    * shingle-hash set ([[ensureShingleSets]]): equal digests mean equal
+    * shingle sets, hence identical MinHash signatures, pairwise Jaccard
+    * exactly 1, and identical Jaccard against every third document.
+    * `rep` is the group's min doc_id and `gsz` its size; only docs with
+    * shingles get a row (a shingle-less doc can never pair — same as the
+    * un-collapsed path). The map is threshold-independent, so one build
+    * serves every LSH threshold, every bench pass, and an incremental
+    * batch run; its write also sums the same-set pairs the collapse
+    * removes ([[dupPairsCount]]).
     */
-  private[graft] def ensureDupGroups(spark: SparkSession, sfDir: String): String =
+  private[graft] def ensureDupGroups(spark: SparkSession, c: Corpus): String =
     graft.util.Scratch.memoizedDir(spark,
-      "graft_dupgroups_" + graft.util.Scratch.valueToken(sfDir),
-      graft.sources.Tables.listingSig(Tables.documents(spark, sfDir))) { path =>
-      val fp = shingleSetFp(shingleIndex(spark, sfDir))
-      val reps = fp.groupBy("fp").agg(min(col("doc_id")).as("rep"))
-      fp.join(reps, "fp").select(col("doc_id"), col("rep"))
-        .write.mode("overwrite").parquet(path)
+      "graft_dupgroups_" + graft.util.Scratch.valueToken(c.dir), c.sig) { path =>
+      val byFp = Window.partitionBy(col("fp"))
+      // Σ over rows of (gsz − 1) = Σ over groups of gsz·(gsz − 1)
+      dupPairsByPath(path) = writeObserved(
+        shingleSets(spark, c)
+          .select(col("doc_id"), sha2(col("hs").cast("string"), 256).as("fp"))
+          .select(col("doc_id"), min(col("doc_id")).over(byFp).as("rep"),
+            count(lit(1)).over(byFp).as("gsz")),
+        path, coalesce(sum(col("gsz") - 1), lit(0L))) / 2
     }
+
+  private def dupGroups(spark: SparkSession, c: Corpus): DataFrame =
+    readArtifact(spark, ensureDupGroups(spark, c), Seq("doc_id", "rep"),
+      StructField("gsz", LongType))
 
   /** Default routing threshold for the identical-set collapse — shared
     * by [[minhashLshPairs]], the Jaccard pair build, and the incremental
@@ -550,28 +588,17 @@ object Dedup {
     */
   private[graft] val CollapseMinPairs = 10000L
 
-  // Σ gsz·(gsz−1)/2 over the identical-set groups, memoized per
-  // dup-groups artifact GENERATION (the path embeds the corpus listing
-  // signature, so a mutated corpus lands on a fresh key): the routing
-  // aggregate runs once per corpus state instead of once per serve —
-  // repeated invocations (bench passes, plan-shape specs) pay a map
-  // lookup, not a Spark job.
-  private val dupPairsCountCache =
-    scala.collection.concurrent.TrieMap[String, Long]()
-
   /** How many same-shingle-set pairs the identical-set collapse would
     * remove from candidate generation + exact verification — the
-    * MEASURED quantity every collapse-routing decision branches on.
+    * MEASURED quantity every collapse-routing decision (the Jaccard pair
+    * build, the incremental label build, [[minhashLshPairs]]) branches
+    * on. What the collapse saves is these Σ gsz·(gsz−1)/2 pairs, and
+    * what it costs is a fixed handful of serve-side stages (the rep
+    * restriction and the member-expansion joins). The sum rides the
+    * group map's own write, so a routing decision costs no Spark job.
     */
-  private[graft] def dupPairsCount(spark: SparkSession, sfDir: String): Long = {
-    val path = ensureDupGroups(spark, sfDir)
-    dupPairsCountCache.getOrElseUpdate(path,
-      spark.read.parquet(path).groupBy("rep").agg(count(lit(1)).as("gsz"))
-        .where(col("gsz") > 1)
-        .agg(coalesce(sum(col("gsz") * (col("gsz") - lit(1))), lit(0L))
-          .as("p"))
-        .head().getLong(0) / 2)
-  }
+  private[graft] def dupPairsCount(spark: SparkSession, c: Corpus): Long =
+    dupPairsByPath(ensureDupGroups(spark, c))
 
   /** MinHash + LSH near-dup pairs: band the signatures, bucket-join, then
     * verify candidates with EXACT Jaccard (so no false positives; false
@@ -584,8 +611,8 @@ object Dedup {
     * per band, then B²/2 exact verifications):
     *
     *  1. IDENTICAL-SET COLLAPSE: docs are grouped by their shingle-set
-    *     fingerprint ([[shingleSetFp]], materialized once per corpus
-    *     state as the [[ensureDupGroups]] map); only one REPRESENTATIVE
+    *     digest (materialized once per corpus state as the
+    *     [[ensureDupGroups]] map); only one REPRESENTATIVE
     *     per group (min doc_id) is signed, banded, bucket-joined, and
     *     exact-verified. Signatures and Jaccard are functions of the
     *     shingle set alone, so this changes NOTHING semantically: a
@@ -609,7 +636,8 @@ object Dedup {
                       threshold: Double, bucketCap: Int = 256,
                       collapseMinPairs: Long = 10000L): DataFrame = {
     val sh = shingleIndex(spark, sfDir)
-    val members = spark.read.parquet(ensureDupGroups(spark, sfDir))
+    val c = corpus(spark, sfDir)
+    val members = dupGroups(spark, c)
     // MEASURED routing (the [[JoinPlanner.measuredSide]] discipline):
     // what the collapse saves is the Σ gsz·(gsz−1)/2 same-set pairs it
     // removes from banding + exact verify, and what it costs is a fixed
@@ -617,36 +645,20 @@ object Dedup {
     // member-expansion joins — ~2 s at bench scale). A handful of
     // duplicate pages (the sf0.1 corpus has 8) saves nothing, while a
     // dup-heavy crawl saves quadratically — so branch on the memoized
-    // group-size aggregate ([[dupPairsCount]]) and take the DIRECT plan
-    // below `collapseMinPairs`. Both branches keep the capped bucket
-    // emission; output is branch-invariant (spec-pinned: the dup-heavy
-    // fixture runs both routes against brute force).
-    if (dupPairsCount(spark, sfDir) < collapseMinPairs) {
-      val banded = bandedOf(signaturesOf(sh))
-      val cand = groupedPairs(banded, Seq("band_idx", "band_hash"),
-          "doc_id", bucketCap)
-        .distinct()
-      return verifyPairs(sh, cand.select(col("doc_a"), col("doc_b")), threshold)
-    }
-    val shReps = sh.join(members.where(col("doc_id") === col("rep"))
-      .select("doc_id"), "doc_id")
-    val banded = bandedOf(signaturesOf(shReps))
-    val candReps = groupedPairs(banded, Seq("band_idx", "band_hash"),
-        "doc_id", bucketCap)
-      .distinct()
-    val repPairs = verifyPairs(shReps,
-      candReps.select(col("doc_a"), col("doc_b")), threshold, sorted = false)
-    // expand verified rep pairs to member pairs: Θ(output) joins against
-    // the member map; members of distinct groups interleave in id order,
-    // so the pair orientation is re-derived per member pair
-    val ma = members.select(col("rep").as("doc_a"), col("doc_id").as("a"))
-    val mb = members.select(col("rep").as("doc_b"), col("doc_id").as("b"))
-    val cross = repPairs.join(ma, "doc_a").join(mb, "doc_b")
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"), col("jaccard"))
-    val within = groupedPairs(members, Seq("rep"), "doc_id", bucketCap)
-      .withColumn("jaccard", lit(1.0))
-    cross.unionAll(within).orderBy("doc_a", "doc_b")
+    // group-size sum ([[dupPairsCount]]) and take the DIRECT plan below
+    // `collapseMinPairs`. Both branches keep the capped bucket emission;
+    // output is branch-invariant (spec-pinned: the dup-heavy fixture
+    // runs both routes against brute force).
+    val collapse = dupPairsCount(spark, c) >= collapseMinPairs
+    val signed = if (!collapse) sh else sh.join(
+      members.where(col("doc_id") === col("rep")).select("doc_id"), "doc_id")
+    val cand = groupedPairs(bandedOf(signaturesOf(signed)),
+        Seq("band_idx", "band_hash"), "doc_id", bucketCap)
+      .distinct().select(col("doc_a"), col("doc_b"))
+    val pairs = verifyPairs(jaccardShingleSide(spark, c, collapse), cand,
+      threshold, sorted = false)
+    (if (collapse) memberPairs(members, pairs, bucketCap) else pairs)
+      .orderBy("doc_a", "doc_b")
   }
 
   /** INCREMENTAL near-dup: dedup an arriving batch against the existing
@@ -658,7 +670,7 @@ object Dedup {
     * append-only — signatures never change once written, see
     * [[signaturesOf]]'s slice-equals-full argument), the new batch's bands
     * are batch-sized, and the bucket join touches only colliding buckets.
-    * Candidates are verified with EXACT Jaccard against the shingle index,
+    * Candidates are verified with EXACT Jaccard against the packed sets,
     * so output precision is 1.0 and the only approximation is banding
     * recall (16×4 bands: P[miss | J=0.8] ≈ 2·10⁻⁴; the spec asserts
     * equality with the exact batch×corpus join at test scale).
@@ -689,7 +701,7 @@ object Dedup {
     val cand = bandsNew.as("x").join(bandsOld.as("y"), Seq("band_idx", "band_hash"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    val matches = verifyPairs(sh, cand, threshold)
+    val matches = verifyPairs(shingleSets(spark, corpus(spark, sfDir)), cand, threshold)
     val byNewDoc = Window.partitionBy(col("doc_a"))
     matches
       .withColumn("n_matches", count(lit(1)).over(byNewDoc))
@@ -766,17 +778,16 @@ object Dedup {
     */
   def dupClusters(spark: SparkSession, sfDir: String,
                   threshold: Double): DataFrame =
-    spark.read.parquet(ensureClusters(spark, sfDir, threshold))
-      .orderBy("doc_id")
+    clusterLabels(spark, corpus(spark, sfDir), threshold).orderBy("doc_id")
 
-  /** Cluster labels MATERIALIZED once per (corpus state, threshold) —
-    * like [[shingleIndex]]: the labeling is consumed by dup-cluster
-    * reporting AND by corpus curation ([[Curate.curateCorpus]]), and the
-    * PPJoin + propagation that produces it is the most expensive plan in
-    * the suite; every consumer after the first reads a 3-column parquet.
-    * Keyed on the corpus listing signature so a mutated corpus relabels
-    * instead of serving stale clusters.
+  /** The materialized (doc_id, cluster_id, cluster_size) labels of one
+    * corpus scan ([[ensureClusters]]), read with their schema declared.
     */
+  private[graft] def clusterLabels(spark: SparkSession, c: Corpus,
+                                   threshold: Double): DataFrame =
+    readArtifact(spark, ensureClusters(spark, c, threshold),
+      Seq("doc_id", "cluster_id"), StructField("cluster_size", LongType))
+
   /** Route taken by the last [[ensureClusters]] build (spec
     * observability): "pairs" (derived from an already-materialized pair
     * relation), "incremental" or "incremental-collapsed" (the
@@ -787,23 +798,38 @@ object Dedup {
 
   /** Work accounting of the last [[jaccardLabelsPlan]] run: candidate
     * pairs in, pairs exact-verified by the sparse rounds, pairs left
-    * for the bulk pass, sparse rounds run. `candidates − sparse − bulk`
-    * = verifications SKIPPED because both endpoints were already in one
-    * component — the per-clique quadratic the incremental build
-    * removes.
+    * for the bulk pass, sparse rounds run, and the route: "bail" when a
+    * round's selection covered more than half of the active candidates
+    * and the build went straight to the bulk verify, else "sparse".
+    * `candidates − sparse − bulk` = verifications SKIPPED because both
+    * endpoints were already in one component — the per-clique quadratic
+    * the incremental build removes.
     */
   private[graft] final case class LabelBuildStats(rounds: Int,
-      candidates: Long, verifiedSparse: Long, verifiedBulk: Long) {
+      candidates: Long, verifiedSparse: Long, verifiedBulk: Long,
+      route: String) {
     def skipped: Long = candidates - verifiedSparse - verifiedBulk
   }
   private[graft] val lastLabelStats =
     new java.util.concurrent.atomic.AtomicReference[LabelBuildStats](
-      LabelBuildStats(0, 0L, 0L, 0L))
+      LabelBuildStats(0, 0L, 0L, 0L, ""))
 
+  /** Cluster labels MATERIALIZED once per (corpus state, threshold) —
+    * like [[shingleIndex]]: the labeling is consumed by dup-cluster
+    * reporting AND by corpus curation ([[Curate.curateCorpus]]), and the
+    * PPJoin + propagation that produces it is the most expensive plan in
+    * the suite; every consumer after the first reads a 3-column parquet.
+    * Keyed on the corpus listing signature so a mutated corpus relabels
+    * instead of serving stale clusters.
+    */
   private[graft] def ensureClusters(spark: SparkSession, sfDir: String,
-                                    threshold: Double): String = {
-    val (name, sig) = jaccardMemoKey(spark, sfDir, threshold, "dupclusters")
-    graft.util.Scratch.memoizedDir(spark, name, sig) { path =>
+                                    threshold: Double): String =
+    ensureClusters(spark, corpus(spark, sfDir), threshold)
+
+  private[graft] def ensureClusters(spark: SparkSession, c: Corpus,
+                                    threshold: Double): String =
+    graft.util.Scratch.memoizedDir(spark,
+        jaccardMemoKey(c, threshold, "dupclusters"), c.sig) { path =>
       // Derive-from-the-cheaper-source routing: when the verified pair
       // relation for this exact (corpus state, threshold) is ALREADY
       // materialized (the declared pair query ran first — the bench's
@@ -814,14 +840,13 @@ object Dedup {
       // what must NOT run — the incremental union-find build below
       // produces identical labels from banded candidates, verifying
       // only pairs whose endpoints are not yet in one component.
-      val (pairsName, pairsSig) =
-        jaccardMemoKey(spark, sfDir, threshold, "jacpairs")
+      val pairsName = jaccardMemoKey(c, threshold, "jacpairs")
       val labels =
-        if (graft.util.Scratch.isMemoized(spark, pairsName, pairsSig)) {
+        if (graft.util.Scratch.isMemoized(spark, pairsName, c.sig)) {
           lastLabelRoute.set("pairs")
           dupClustersFromPairs(spark,
-            spark.read.parquet(ensureJaccardPairs(spark, sfDir, threshold))
-              .select("doc_a", "doc_b"),
+            readArtifact(spark, ensureJaccardPairs(spark, c, threshold),
+              Seq("doc_a", "doc_b")),
             // same measured small-graph bound as the image/audio cluster
             // paths: a J≥0.8 near-dup graph is the dedup OUTPUT (pairs ≪
             // corpus) — under 100k symmetric edges the driver union-find
@@ -830,14 +855,13 @@ object Dedup {
             // across both paths and the over-threshold negative)
             localEdgeThreshold = 100000L)
         } else {
-          val collapse = collapseRoute(spark, sfDir)
+          val collapse = dupPairsCount(spark, c) >= CollapseMinPairs
           lastLabelRoute.set(
             if (collapse) "incremental-collapsed" else "incremental")
-          jaccardLabelsPlan(spark, sfDir, threshold, collapse)
+          jaccardLabelsPlan(spark, c, threshold, collapse)
         }
       labels.write.mode("overwrite").parquet(path)
     }
-  }
 
   /** INCREMENTAL UNION-FIND label build — duplicate-cluster labels
     * WITHOUT materializing the quadratic pair relation (the r17 verdict
@@ -846,23 +870,26 @@ object Dedup {
     * J ≥ t pairs, but its cluster labeling needs only a spanning
     * subset. The build verifies candidates in ROUNDS:
     *
-    *  1. SPARSE round: of the surviving candidates, verify only each
+    *  1. SPARSE round: of the surviving candidates, select only each
     *     doc's minimum partner per orientation (≤ 2 pairs per doc —
     *     the path∪star spanning selection: a true-dense candidate
     *     subgraph merges into one component in a single round).
-    *  2. Union verified pairs into component labels
-    *     ([[dupClustersFromPairs]] over the true edges so far) and DROP
-    *     every remaining candidate whose endpoints now share a
+    *  2. Verify the selection, union verified pairs into component
+    *     labels ([[dupClustersFromPairs]] over the true edges so far)
+    *     and DROP every remaining candidate whose endpoints now share a
     *     component — skipping a within-component edge can never change
     *     connected components, so the final labels are EXACTLY the
     *     labels of the full verified pair graph (spec-pinned against
     *     the pair-path labels on a dup-heavy fixture).
     *  3. Repeat while a round keeps collapsing the active set (< 50%
     *     survivors, ≤ 3 rounds), then BULK-verify whatever remains —
-    *     cross-component candidates and verification failures, which
-    *     on a normal corpus is almost everything (the sparse round
-    *     costs ≤ 2N extra verifications) and on a dup-heavy corpus is
-    *     almost nothing (the quadratic clique mass is gone).
+    *     cross-component candidates and verification failures. A round
+    *     whose selection is already more than half of the active set
+    *     has no clique mass to skip: it BAILS before step 2 (no
+    *     selection verify, CC or anti-join re-scan) straight to the bulk
+    *     verify. A corpus of near-dup pairs and triples bails in its
+    *     first round; on a clique-heavy corpus the selection is ~2 pairs
+    *     per doc against a quadratic candidate set, and the rounds run.
     *
     * On the collapsed route everything above runs over shingle-set
     * representatives; member expansion (including groups whose rep has
@@ -873,26 +900,29 @@ object Dedup {
     */
   private[graft] def jaccardLabelsPlan(spark: SparkSession, sfDir: String,
                                        threshold: Double,
-                                       collapse: Boolean): DataFrame = {
+                                       collapse: Boolean): DataFrame =
+    jaccardLabelsPlan(spark, corpus(spark, sfDir), threshold, collapse)
+
+  private def jaccardLabelsPlan(spark: SparkSession, c: Corpus, threshold: Double,
+                                collapse: Boolean): DataFrame = {
     import spark.implicits._
-    // packed once, reused by every round's verify (checkpointed so the
-    // groupBy doesn't re-run per round)
-    val packed = roundCheckpoint(spark,
-      packedShingleSets(jaccardShingleSide(spark, sfDir, collapse)))
-    val cand0 = spark.read.parquet(
-      ensureJaccardCandidates(spark, sfDir, threshold, collapse))
+    // a parquet artifact: every round's verify re-reads it
+    val packed = jaccardShingleSide(spark, c, collapse)
+    val candPath = ensureJaccardCandidates(spark, c, threshold, collapse)
     def counted(df: DataFrame): (DataFrame, Long) = {
       val obs = new org.apache.spark.sql.Observation()
       val out = roundCheckpoint(spark, df.observe(obs, count(lit(1)).as("n")))
       (out, obs.get.get("n") match {
         case Some(n: Number) => n.longValue(); case _ => 0L })
     }
-    var (active, activeCount) = counted(cand0)
+    var active = readArtifact(spark, candPath, Seq("doc_a", "doc_b"))
+    var activeCount = candidateCounts(candPath)
     val candTotal = activeCount
     var trueEdges: DataFrame =
       spark.emptyDataset[(Long, Long)].toDF("doc_a", "doc_b")
     var verifiedSparse = 0L
     var rounds = 0
+    var route = "sparse"
     var keepSparse = activeCount > 0
     while (keepSparse) {
       rounds += 1
@@ -901,47 +931,51 @@ object Dedup {
       val (selected, nSel) = counted(
         byA.select("doc_a", "doc_b")
           .unionAll(byB.select("doc_a", "doc_b")).distinct())
-      verifiedSparse += nSel
-      trueEdges = roundCheckpoint(spark, trueEdges.unionAll(
-        verifyPairsPacked(packed, selected, threshold, sorted = false)
-          .select("doc_a", "doc_b")))
-      val labels = dupClustersFromPairs(spark, trueEdges,
-          localEdgeThreshold = 100000L)
-        .select(col("doc_id"), col("cluster_id"))
-      val la = labels.toDF("doc_a", "ca")
-      val lb = labels.toDF("doc_b", "cb")
-      val (nextActive, nextCount) = counted(
-        active.join(selected, Seq("doc_a", "doc_b"), "left_anti")
-          .join(la, Seq("doc_a"), "left").join(lb, Seq("doc_b"), "left")
-          .where(coalesce(col("ca"), col("doc_a")) =!=
-            coalesce(col("cb"), col("doc_b")))
-          .select("doc_a", "doc_b"))
-      keepSparse = nextCount > 0 && nextCount < activeCount / 2 && rounds < 3
-      active = nextActive
-      activeCount = nextCount
+      if (2 * nSel > activeCount) {
+        route = "bail"
+        keepSparse = false
+      } else {
+        verifiedSparse += nSel
+        trueEdges = roundCheckpoint(spark, trueEdges.unionAll(
+          verifyPairs(packed, selected, threshold, sorted = false)
+            .select("doc_a", "doc_b")))
+        val labels = dupClustersFromPairs(spark, trueEdges,
+            localEdgeThreshold = 100000L)
+          .select(col("doc_id"), col("cluster_id"))
+        val la = labels.toDF("doc_a", "ca")
+        val lb = labels.toDF("doc_b", "cb")
+        val (nextActive, nextCount) = counted(
+          active.join(selected, Seq("doc_a", "doc_b"), "left_anti")
+            .join(la, Seq("doc_a"), "left").join(lb, Seq("doc_b"), "left")
+            .where(coalesce(col("ca"), col("doc_a")) =!=
+              coalesce(col("cb"), col("doc_b")))
+            .select("doc_a", "doc_b"))
+        keepSparse = nextCount > 0 && nextCount < activeCount / 2 && rounds < 3
+        active = nextActive
+        activeCount = nextCount
+      }
     }
     val verifiedBulk = activeCount
     lastLabelStats.set(
-      LabelBuildStats(rounds, candTotal, verifiedSparse, verifiedBulk))
+      LabelBuildStats(rounds, candTotal, verifiedSparse, verifiedBulk, route))
     val allEdges =
       if (verifiedBulk == 0) trueEdges
       else trueEdges.unionAll(
-        verifyPairsPacked(packed, active, threshold, sorted = false)
+        verifyPairs(packed, active, threshold, sorted = false)
           .select("doc_a", "doc_b"))
     val cc = dupClustersFromPairs(spark, allEdges,
       localEdgeThreshold = 100000L)
     if (!collapse) cc
     else {
-      val members = spark.read.parquet(ensureDupGroups(spark, sfDir))
+      val members = dupGroups(spark, c)
       val repCC = cc.select(col("doc_id").as("rep"), col("cluster_id"))
       // identical-set groups whose rep pairs with nothing else still
       // cluster among themselves (every member pair has J = 1)
-      val lone = members.groupBy("rep").agg(count(lit(1)).as("gsz"))
-        .where(col("gsz") > 1)
+      val lone = members.where(col("doc_id") === col("rep") && col("gsz") > 1)
         .join(repCC, Seq("rep"), "left_anti")
         .select(col("rep"), col("rep").as("cluster_id"))
       val memberLabels = repCC.unionByName(lone)
-        .join(members, "rep")
+        .join(members.select("doc_id", "rep"), "rep")
         .select(col("doc_id"), col("cluster_id"))
       val sizes = memberLabels.groupBy("cluster_id")
         .agg(count(lit(1)).as("cluster_size"))
@@ -1146,10 +1180,9 @@ object Dedup {
     */
   def clusterKeepLongest(spark: SparkSession, sfDir: String,
                          threshold: Double = 0.8): DataFrame = {
-    val cl = spark.read.parquet(ensureClusters(spark, sfDir, threshold))
-      .select("doc_id", "cluster_id")
-    val docs = Tables.documents(spark, sfDir)
-      .select("doc_id", "source", "n_chars")
+    val c = corpus(spark, sfDir)
+    val cl = clusterLabels(spark, c, threshold).select("doc_id", "cluster_id")
+    val docs = c.docs.select("doc_id", "source", "n_chars")
     val labeled = docs.join(cl, Seq("doc_id"), "left")
       .withColumn("cid", coalesce(col("cluster_id"), col("doc_id")))
     val keeperRank = Window.partitionBy(col("cid"))

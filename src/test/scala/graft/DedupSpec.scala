@@ -106,6 +106,74 @@ class DedupSpec extends SparkTestBase {
     assert(gotCap1 === want)
   }
 
+  test("packed shingle sets, dup groups and PPJoin candidates match their string-shingle definitions") {
+    import org.apache.spark.sql.expressions.Window
+    // the reference definitions, over the string shingle relation: the
+    // groupBy packing, the sha-256 group map over sorted shingle strings,
+    // and the two-window PPJoin prefix
+    def check(dir: String): Unit = {
+      val c = Dedup.corpus(spark, dir)
+      val sh = Dedup.shingleIndex(spark, dir)
+      val packed = sh.groupBy("doc_id").agg(
+        sort_array(collect_list(xxhash64(col("sh")))).as("hs"),
+        count(lit(1)).as("n_sh"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_id", "hs", "n_sh").as[(Long, Seq[Long], Long)].collect().toSet
+      assert(rows(Dedup.shingleSets(spark, c)) === rows(packed))
+
+      val fp = sh.groupBy("doc_id").agg(
+        sha2(concat_ws("\u0000", sort_array(collect_list(col("sh")))), 256).as("fp"))
+      val groups = fp.join(fp.groupBy("fp").agg(min(col("doc_id")).as("rep")), "fp")
+        .select("doc_id", "rep").as[(Long, Long)].collect().toSet
+      assert(spark.read.parquet(Dedup.ensureDupGroups(spark, c))
+        .select("doc_id", "rep").as[(Long, Long)].collect().toSet === groups)
+      assert(Dedup.dupPairsCount(spark, c) === groups.groupBy(_._2).values
+        .map(g => g.size.toLong * (g.size - 1) / 2).sum)
+
+      val reps = groups.collect { case (d, r) if d == r => d }.toSeq.toDF("doc_id")
+      for (overReps <- Seq(false, true)) {
+        val hashed = sh.select(col("doc_id"), xxhash64(col("sh")).as("sh"))
+        val side = if (overReps) hashed.join(reps, "doc_id") else hashed
+        val freq = side.groupBy("sh").agg(count(lit(1)).as("df"))
+        val prefix = side.join(freq, "sh")
+          .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+          .withColumn("rn", row_number().over(
+            Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))))
+          .filter(col("rn") <= col("n_sh") - ceil(lit(0.8) * col("n_sh")) + 1)
+        val tEff = 0.8 - 5e-7
+        val want = prefix.as("x").join(prefix.as("y"), "sh")
+          .where(col("x.doc_id") < col("y.doc_id") &&
+            least(col("x.n_sh"), col("y.n_sh")) >=
+              lit(0.8) * greatest(col("x.n_sh"), col("y.n_sh")))
+          .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+            col("x.n_sh").as("na"), col("y.n_sh").as("nb"))
+          .agg(max(lit(1) + least(col("x.n_sh") - col("x.rn"),
+            col("y.n_sh") - col("y.rn"))).as("ub"))
+          .where(col("ub") >= ceil(lit(tEff / (1 + tEff)) *
+            (col("na") + col("nb")) - lit(1e-9)))
+          .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+        val got = spark.read.parquet(
+            Dedup.ensureJaccardCandidates(spark, c, 0.8, overReps))
+          .as[(Long, Long)].collect().toSet
+        assert(got === want, s"candidates differ (overReps = $overReps)")
+      }
+    }
+    check(sf)
+    // a doc under 3 tokens (no shingles, so no row), an identical-set
+    // group, a near-dup pair and a doc_id stored twice
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val docs = Seq((1L, base), (2L, base), (3L, base.replace("mu", "nu")),
+      (4L, "tiny doc"), (5L, "one two three four five"), (5L, "four five six seven"),
+      (6L, "unrelated words about spark parquet files and query plans"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_shinglesets").toString
+    try {
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      check(dir)
+      assert(!Dedup.shingleSets(spark, Dedup.corpus(spark, dir))
+        .as[(Long, Seq[Long], Long)].collect().exists(_._1 == 4L))
+    } finally graft.util.Scratch.deleteRecursively(dir)
+  }
+
   test("containmentPairs == brute-force asymmetric containment at 0.9") {
     // prefix filtering for containment is a theorem (pigeonhole over the
     // ⌊(1−t)·|A|⌋ misses), not a probabilistic recall bound — the output

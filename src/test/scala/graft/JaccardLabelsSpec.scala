@@ -91,10 +91,38 @@ class JaccardLabelsSpec extends SparkTestBase {
       s"expected quadratic clique mass skipped, got $stats")
     assert(stats.verifiedSparse + stats.verifiedBulk + stats.skipped ===
       stats.candidates)
+    assert(stats.route !== "bail", s"the clique fixture must run its sparse rounds: $stats")
 
     val incCollapsed = labelRows(Dedup.jaccardLabelsPlan(spark, dir, 0.8,
       collapse = true))
     assert(incCollapsed === pairPath)
+  }
+
+  test("sparse rounds bail to one bulk verify on a low-dup corpus; labels == pair-path labels") {
+    // near-dup pairs and 3-cliques in disjoint vocabularies, plus
+    // singletons: a round's min-partner selection covers every candidate,
+    // so there is no clique mass for a sparse round to skip
+    val pairs = (4 until 8).flatMap(f =>
+      Seq((1000L + 10 * f, cliqueDoc(f, 0)), (1001L + 10 * f, cliqueDoc(f, 1))))
+    val triples = (8 until 11).flatMap(f =>
+      (0 until 3).map(j => (1000L + 10 * f + j, cliqueDoc(f, j))))
+    val singles = (11 until 14).map(f => (1000L + 10 * f, famWords(f).mkString(" ")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_jlabels_lowdup").toString
+    try {
+      (pairs ++ triples ++ singles).toDF("doc_id", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      val pairPath = labelRows(Dedup.dupClustersFromPairs(spark,
+        Dedup.jaccardPairsPlan(spark, dir, 0.8, collapse = false,
+          sorted = false).select("doc_a", "doc_b")))
+      assert(pairPath.toSeq.map(_._3).sorted ===
+        Seq.fill(8)(2L) ++ Seq.fill(9)(3L), "fixture drifted")
+      val inc = labelRows(Dedup.jaccardLabelsPlan(spark, dir, 0.8,
+        collapse = false))
+      val stats = Dedup.lastLabelStats.get()
+      assert(stats.route === "bail", s"expected the bail route, got $stats")
+      assert(stats.verifiedSparse === 0L && stats.verifiedBulk === stats.candidates)
+      assert(inc === pairPath)
+    } finally graft.util.Scratch.deleteRecursively(dir)
   }
 
   test("pair plan is route-invariant: collapsed == direct") {

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graftshim.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 import graft.operators.{IndexQueries, Indexer, MaterializedIndex}
 
@@ -29,8 +30,13 @@ class JobBudgetSpec extends SparkTestBase
   private val Tag = "graft.jobBudget.tag"
 
   private def warmJobs(run: => Any): Int = {
-    val sc = spark.sparkContext
     run
+    jobsOf(run)
+  }
+
+  // the Spark jobs `run` starts on this thread
+  private def jobsOf(run: => Any): Int = {
+    val sc = spark.sparkContext
     ListenerBridge.waitUntilEmpty(sc)
     val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
@@ -95,6 +101,27 @@ class JobBudgetSpec extends SparkTestBase
     val jobs = servedQueries.map { case (name, q) => name -> warmJobs(q().collect()) }
     assert(jobs.forall(_._2 <= 1),
       jobs.map { case (n, j) => s"$n: $j" }.mkString("warm jobs per query: ", ", ", ""))
+  }
+
+  // a cold curation pass over a corpus no artifact exists for: the
+  // documents scan's schema, the packed shingle sets, the dup-group map,
+  // the PPJoin candidates, the label build and the keeper joins
+  test("Curate.curateCorpus on a fresh tiny corpus runs at most 27 Spark jobs") {
+    val letters = "abcdefghijklmnopqrstuvwxyz"
+    def words(f: Int) = (0 until 40).map(i => s"t${letters(f)}${letters(i % 26)}${letters(i / 26)}")
+    val distinct = (0 until 20).map(f => (f.toLong, words(f).mkString(" ")))
+    val exact = (0 until 4).map(f => (100L + f, words(f).mkString(" ")))
+    val near = (0 until 6).map(f =>
+      (200L + f, words(f).updated(5, s"n${letters(f)}").mkString(" ")))
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobbudget_curate").toString
+    try {
+      (distinct ++ exact ++ near).toDF("doc_id", "text").withColumn("lang", lit("en"))
+        .write.parquet(s"$dir/documents.parquet")
+      var kept = 0
+      val n = jobsOf { kept = graft.operators.Curate.curateCorpus(spark, dir).collect().length }
+      assert(kept === 20, "fixture drifted")
+      assert(n <= 27, s"curateCorpus ran $n Spark jobs, budget 27")
+    } finally graft.util.Scratch.deleteRecursively(dir)
   }
 
   // one rewrite of a document: the affected-letter collect, the
